@@ -31,7 +31,8 @@ EOF
 echo "levels: local[$N1] vs local[$N2], entities: $N"
 echo "loadavg: $(cut -d' ' -f1-3 /proc/loadavg)"
 C1=$(ceiling); echo "$C1"
-export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-24g}
+# driver heap: half of MemTotal, clamped to 2-8 GB (fits the host, as the tests do)
+export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
 T1=$(sbt -batch "runMain graft.ScalingBench $N1 $N" 2>/dev/null | grep -o '{"metric":"pipeline_throughput.*}')
 echo "$T1"
 T2=$(sbt -batch "runMain graft.ScalingBench $N2 $N" 2>/dev/null | grep -o '{"metric":"pipeline_throughput.*}')

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: all catalog queries on SPARK_GRAFT_SF_DIR plus the
   * end-to-end ER pipeline (generated corpus sized to the SF). One warmup
   * execution of a small query first so JVM/codegen startup isn't billed to
@@ -19,24 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // data-sized shuffle width for AQE plans (start wide, coalesce to
-      // the 16 MB advisory target) + hash joins over sort-merge: the job
-      // shape that closed the scaling-efficiency gate (BASELINE.md r3).
-      // shuffle.partitions stays core-sized because it is what NON-AQE
-      // plans use — stateful streaming disables AQE, and a 1024-task
-      // micro-batch is pure scheduler churn (measured 4x slowdown).
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "1024")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.jobShape(cpus)
 
     def loadNow(): Double =
       try new String(java.nio.file.Files.readAllBytes(
@@ -115,8 +96,8 @@ object Bench {
 
     // N-vs-4N scaling evidence is NOT measured here: a same-JVM sequential
     // pair (warm heap, ordering bias, fixed-cost-dominated small corpus) is
-    // methodologically unsound. scripts/scaling_with_ceiling.sh measures it
-    // properly (fresh JVM per level, 1.35M pages, hardware-ceiling
+    // methodologically unsound. scripts/scaling_pair.sh measures it
+    // properly (fresh JVM per level, any N vs 4N, hardware-ceiling
     // bracketing); results live in BASELINE.md "Scaling efficiency".
     // measurement-window context: host load (at start = background
     // contention, at end = including this bench) and core estimate, so

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * key's row count.
   *
   * Generalized from the ER pipeline's hot-block neighborhood ranking
-  * (ErPipeline.prefixSumWithinBlocks delegates here) so sequence packing
-  * and other stream-offset operators reuse the same scale-safe kernel.
+  * (ErPipeline.rankWithinBlocks and its giant-block probe call it here) so
+  * sequence packing and other stream-offset operators reuse the same
+  * scale-safe kernel.
   */
 object PrefixSum {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.{Normalize, Similarity}
-import graft.operators.Clustering
+import graft.operators.{Clustering, PrefixSum}
 import graft.plans.StageStore
 
 /** The end-to-end record-linkage pipeline (SURVEY.md par.7.1):
@@ -277,22 +277,13 @@ object ErPipeline {
     capPerRecord(deduped, cfg.maxCandidatesPerRecord, bothSides = true)
   }
 
-  /** Distributed within-key running sum over block keys — the shared
-    * scale-safe kernel lives in [[graft.operators.PrefixSum]] (no
-    * whole-key window task; see its doc). Returns (input columns, `out`,
-    * _pid); _pid is kept so callers/tests can observe the spread.
-    */
-  private[graft] def prefixSumWithinBlocks(
-      rows: DataFrame, orderCols: Seq[String],
-      weight: Column, out: String): DataFrame =
-    graft.operators.PrefixSum.withinKeys(rows, Seq("bk"), orderCols, weight, out)
-
   /** Global 1-based rank of `url` within each `bk` — the weight-1
-    * specialization of prefixSumWithinBlocks (url is unique per key, so
-    * the running count IS the rank).
+    * specialization of [[PrefixSum.withinKeys]] (url is unique per key, so
+    * the running count IS the rank). Returns (input columns, rn, _pid);
+    * _pid is kept so callers/tests can observe the spread.
     */
   private[graft] def rankWithinBlocks(rows: DataFrame): DataFrame =
-    prefixSumWithinBlocks(rows, Seq("url"), lit(1L), "rn")
+    PrefixSum.withinKeys(rows, Seq("bk"), Seq("url"), lit(1L), "rn")
 
   /** n_closest-style cap (I4/O4): keep each record's strongest pairs —
     * most shared blocking keys first, url tiebreak. With bothSides, the
@@ -392,9 +383,9 @@ object ErPipeline {
       merged(0L, cfg.hotRankCap)
         .withColumn("pos", sum(lit(1L) - col("side")).over(mw)))
     val giantPairs = probePairs(
-      prefixSumWithinBlocks(
+      PrefixSum.withinKeys(
         merged(cfg.hotRankCap.toLong, Long.MaxValue),
-        Seq("u", "side"), lit(1L) - col("side"), "pos"))
+        Seq("bk"), Seq("u", "side"), lit(1L) - col("side"), "pos"))
 
     val deduped = coldPairs.select(col("bk"), col("url1"), col("url2"))
       .unionByName(hotPairs)

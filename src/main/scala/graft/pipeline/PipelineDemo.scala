@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
+import graft.core.Sessions
 import graft.sources.WebPageGen
 
 /** Runnable end-to-end drive of the ER pipeline on the synthetic corpus:
@@ -16,15 +15,7 @@ object PipelineDemo {
     val n = if (args.length > 0) args(0).toLong else 200L
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft-er-demo"
     val cpus = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-er-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.jobShape(cpus)
 
     val t0 = System.nanoTime()
     val pages = WebPageGen.pages(spark, n).toDF

@@ -3,6 +3,10 @@ package graft.plans
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,28 +44,25 @@ object StageStore {
         */
       fileKeyedStats: Boolean = true)
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private val Json = new ObjectMapper()
 
+  /** Compact, fixed field order; `stat_keying` only on file-keyed stats. */
   def toJson(m: Manifest): String = {
-    val params = m.params.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
-    val parts = m.partitions.sortBy(_.partition)
-      .map(p => s"""{"partition":${p.partition},"rows":${p.rows},"checksum":${p.checksum}}""")
-      .mkString("[", ",", "]")
-    s"""{"stage":"${esc(m.stage)}","pipeline_version":"${esc(m.pipelineVersion)}",""" +
-      s""""inputs_fingerprint":"${esc(m.inputsFingerprint)}","params":$params,""" +
-      (if (m.fileKeyedStats) """"stat_keying":"file",""" else "") +
-      s""""rows":${m.rows},"partitions":$parts,"wall_clock_sec":${m.wallClockSec},""" +
-      s""""written_at_ms":${m.writtenAtMs}}"""
+    val o = Json.createObjectNode()
+      .put("stage", m.stage)
+      .put("pipeline_version", m.pipelineVersion)
+      .put("inputs_fingerprint", m.inputsFingerprint)
+    val params = o.putObject("params")
+    m.params.toSeq.sortBy(_._1).foreach { case (k, v) => params.put(k, v) }
+    if (m.fileKeyedStats) o.put("stat_keying", "file")
+    o.put("rows", m.rows)
+    val parts = o.putArray("partitions")
+    m.partitions.sortBy(_.partition).foreach { p =>
+      parts.addObject().put("partition", p.partition).put("rows", p.rows)
+        .put("checksum", p.checksum)
+    }
+    o.put("wall_clock_sec", m.wallClockSec).put("written_at_ms", m.writtenAtMs)
+    Json.writeValueAsString(o)
   }
 
   /** Stable fingerprint of a DataFrame's content: order-insensitive sum of
@@ -84,32 +85,29 @@ object StageStore {
   private def dataPath(root: String, stage: String) =
     s"$root/$stage/data.parquet"
 
+  /** None when the stage has no manifest, or one that is not a manifest
+    * (the stage is then recomputed and the manifest rewritten).
+    */
   def readManifest(root: String, stage: String): Option[Manifest] = {
     val p = manifestPath(root, stage)
     if (!Files.exists(p)) return None
-    val s = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    // minimal field extraction (manifests are engine-written, schema-fixed)
-    def field(name: String): Option[String] = {
-      val m = ("\"" + name + "\":\"([^\"]*)\"").r.findFirstMatchIn(s)
-      m.map(_.group(1))
-    }
-    // top-level "rows" precedes the partitions array in toJson's layout,
-    // so the FIRST match is the stage row count, and every "checksum"
-    // match is a per-partition xor — their xor is the global row-hash xor
-    val totalRows = "\"rows\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    val partStats = {
-      val ps = "\\{\"partition\":(\\d+),\"rows\":(\\d+),\"checksum\":(-?\\d+)\\}".r
-      ps.findAllMatchIn(s)
-        .map(m => PartitionStat(m.group(1).toInt, m.group(2).toLong, m.group(3).toLong))
-        .toSeq
-    }
+    val j =
+      try Json.readTree(Files.readAllBytes(p))
+      catch { case _: JsonProcessingException => return None }
+    def text(name: String): Option[String] =
+      Option(j.get(name)).filter(_.isTextual).map(_.asText)
     for {
-      st <- field("stage")
-      v <- field("pipeline_version")
-      f <- field("inputs_fingerprint")
-    } yield Manifest(st, v, f, Map.empty, totalRows.getOrElse(0L), partStats, 0.0,
-      "\"written_at_ms\":(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toLong).getOrElse(0L),
-      fileKeyedStats = s.contains("\"stat_keying\":\"file\""))
+      st <- text("stage")
+      v <- text("pipeline_version")
+      f <- text("inputs_fingerprint")
+    } yield Manifest(st, v, f,
+      j.path("params").properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap,
+      j.path("rows").asLong,
+      j.path("partitions").asScala.map(e => PartitionStat(
+        e.path("partition").asInt, e.path("rows").asLong, e.path("checksum").asLong)).toSeq,
+      j.path("wall_clock_sec").asDouble,
+      j.path("written_at_ms").asLong,
+      fileKeyedStats = j.path("stat_keying").asText == "file")
   }
 
   private val PartIdx = "part-(\\d+)".r

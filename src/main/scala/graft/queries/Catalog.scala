@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Par
 import graft.functions.{Normalize, Similarity, TextAnalysis}
 import graft.operators.{Ann, Dedup}
 
@@ -66,23 +67,6 @@ object Catalog {
       } finally stream.close()
     } catch { case _: java.io.IOException => () }
 
-  /** Explicit width for exchanges feeding PAIR-EXPLODING or per-row-heavy
-    * compute (block self-joins, edit-distance verifies, media decodes).
-    * AQE's partition coalescing sizes post-shuffle partitions by the
-    * MAP-side bytes of the exchange, but these operators multiply work
-    * ~|block| (or ~cost-per-row) downstream of it, so the 16 MB advisory
-    * collapses a kilobyte-scale probe side into ONE partition and
-    * serializes the whole scan on a single core (measured round 6:
-    * er_blocking_pairs ran 4 tasks total with 6.9 s of its 7.2 s in one
-    * task; guide par.2.5 "compare max to median"). An explicit partition
-    * count opts exactly this exchange out of coalescing
-    * (REPARTITION_BY_NUM); the width follows the scheduler's width —
-    * defaultParallelism tracks total cluster cores at any scale, and a
-    * production session that raises spark.sql.shuffle.partitions raises
-    * this too — never a local constant.
-    */
-  private[graft] def spread(s: SparkSession): Int = graft.core.Par.spread(s)
-
   /** Table scan for per-row-HEAVY projections (quality regexes, language
     * markers, redaction, simhash — all interpreted higher-order funcs or
     * multi-regex passes): when the source supplies fewer splits than the
@@ -95,7 +79,7 @@ object Catalog {
     */
   private def tWide(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(s, dir, name)
-    val target = spread(s)
+    val target = Par.spread(s)
     if (df.rdd.getNumPartitions * 2 >= target) df else df.repartition(target)
   }
 
@@ -449,9 +433,9 @@ object Catalog {
         col("lang"),
         col("source"),
         Normalize.normalizeField(Seq(col("text")), 60).as("text_norm"))
-    // spread only the probe side (explicit width — see spread()); the
+    // spread only the probe side (explicit width — see Par.spread); the
     // build side broadcasts
-    val lhs = docs.repartition(spread(s), col("lang"), col("source"), col("doc_id")).select(
+    val lhs = docs.repartition(Par.spread(s), col("lang"), col("source"), col("doc_id")).select(
       col("lang"), col("source"),
       col("doc_id").as("doc_id1"), col("text_norm").as("t1"))
     val rhs = docs.select(
@@ -547,7 +531,7 @@ object Catalog {
     // only the probe side needs spreading (single-split parquet would
     // otherwise pair in one task); the build side gets broadcast, where a
     // repartition would be a wasted exchange
-    val a = c.repartition(spread(s), col("c_nationkey"), col("c_custkey"))
+    val a = c.repartition(Par.spread(s), col("c_nationkey"), col("c_custkey"))
       .select(col("c_nationkey"), col("c_mktsegment"),
         col("c_custkey").as("k1"), col("c_name").as("n1"))
     val b = c.select(col("c_nationkey"), col("c_mktsegment"),
@@ -578,7 +562,7 @@ object Catalog {
   val erTopkCandidates: Q = (s, dir) => {
     val c = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"), col("c_name"))
-    val a = c.repartition(spread(s), col("c_nationkey"), col("c_mktsegment"), col("c_custkey"))
+    val a = c.repartition(Par.spread(s), col("c_nationkey"), col("c_mktsegment"), col("c_custkey"))
       .select(col("c_nationkey"), col("c_mktsegment"),
         col("c_custkey").as("k1"), col("c_name").as("n1"))
     val b = c.select(col("c_nationkey"), col("c_mktsegment"),
@@ -590,7 +574,7 @@ object Catalog {
       // explicit width for the top-k window's exchange too: AQE would
       // coalesce the 1.8M scored rows to a couple of partitions and
       // serialize the per-k1 sort
-      .repartition(spread(s), col("k1"))
+      .repartition(Par.spread(s), col("k1"))
     val w = Window.partitionBy("k1").orderBy(col("jw").desc, col("k2"))
     scored.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
@@ -724,7 +708,7 @@ object Catalog {
   val erWrongPairs: Q = (s, dir) => {
     val c = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"), col("c_name"))
-    val a = c.repartition(spread(s), col("c_nationkey"), col("c_custkey"))
+    val a = c.repartition(Par.spread(s), col("c_nationkey"), col("c_custkey"))
       .select(col("c_nationkey"), col("c_mktsegment"),
         col("c_custkey").as("k1"), col("c_name").as("n1"))
     val b = c.select(col("c_nationkey"), col("c_mktsegment"),
@@ -773,7 +757,7 @@ object Catalog {
     */
   val erClusters: Q = (s, dir) => {
     val c = t(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"), col("c_name"))
-      .repartition(spread(s), col("c_nationkey"), col("c_custkey"))
+      .repartition(Par.spread(s), col("c_nationkey"), col("c_custkey"))
     // deletion-neighborhood blocking: exact lev<=1 recall with O(n * len)
     // keys instead of the O(block^2) Levenshtein scan the oracle SQL does
     val edges = Dedup.lev1Pairs(c, "c_custkey", "c_name", Seq("c_nationkey"))
@@ -2002,7 +1986,7 @@ object Catalog {
     import graft.operators.Multimodal
     // explicit spread: the decode cost is per-ROW, not per-byte — on a
     // single-split scan the whole synth+decode pass would run in one task
-    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(spread(s)).as[Long]
+    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(Par.spread(s)).as[Long]
       .map(id => (id, Multimodal.syntheticBmp(id)))
       .toDF("doc_id", "payload")
     Multimodal.decodeBmpStats(payloads)
@@ -2037,7 +2021,7 @@ object Catalog {
     import graft.operators.Multimodal
     // explicit spread: the decode cost is per-ROW, not per-byte — on a
     // single-split scan the whole synth+decode pass would run in one task
-    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(spread(s)).as[Long]
+    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(Par.spread(s)).as[Long]
       .map(id => (id, Multimodal.syntheticPng(id)))
       .toDF("doc_id", "payload")
     Multimodal.decodeImageStats(payloads)
@@ -2070,7 +2054,7 @@ object Catalog {
     import graft.operators.Multimodal
     // explicit spread: the decode cost is per-ROW, not per-byte — on a
     // single-split scan the whole synth+decode pass would run in one task
-    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(spread(s)).as[Long]
+    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(Par.spread(s)).as[Long]
       .map(id => (id, Multimodal.syntheticGif(id)))
       .toDF("doc_id", "payload")
     Multimodal.decodeGifStats(payloads, stride = 2)
@@ -2108,7 +2092,7 @@ object Catalog {
     import graft.operators.Multimodal
     // explicit spread: the decode cost is per-ROW, not per-byte — on a
     // single-split scan the whole synth+decode pass would run in one task
-    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(spread(s)).as[Long]
+    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(Par.spread(s)).as[Long]
       .map(id => (id, Multimodal.syntheticAvi(id)))
       .toDF("doc_id", "payload")
     Multimodal.decodeAviStats(payloads, stride = 2)
@@ -2147,7 +2131,7 @@ object Catalog {
     import graft.operators.Multimodal
     // explicit spread: the decode cost is per-ROW, not per-byte — on a
     // single-split scan the whole synth+decode pass would run in one task
-    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(spread(s)).as[Long]
+    val payloads = t(s, dir, "documents").select(col("doc_id")).repartition(Par.spread(s)).as[Long]
       .map(id => (id, Multimodal.syntheticWav(id)))
       .toDF("doc_id", "payload")
     Multimodal.decodeWavStats(payloads)

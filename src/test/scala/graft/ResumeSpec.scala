@@ -46,6 +46,12 @@ class ResumeSpec extends SparkSpec {
       // changed params -> recompute
       StageStore.runStage(spark, root, "s1", "v1", "fp-B", Map("k" -> "1"))(once())
       assert(computeCount === 3)
+      // a version and params holding JSON escapes (" and \) read back intact
+      val escaped = "v\"1\\"
+      StageStore.runStage(spark, root, "s1e", escaped, "fp-A", Map("k" -> "a\\\"b"))(once())
+      assert(computeCount === 4)
+      StageStore.runStage(spark, root, "s1e", escaped, "fp-A", Map("k" -> "a\\\"b"))(once())
+      assert(computeCount === 4, "an escaped version must resume, not recompute")
     } finally rmrf(root)
   }
 
