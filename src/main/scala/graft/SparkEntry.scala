@@ -17,7 +17,8 @@ object SparkEntry {
     graft.queries.Catalog.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
+    * the same parquet tables. Both maps come from `Catalog.all`, so they
+    * have the same keys.
     */
   def oracleSql: Map[String, String] = graft.queries.Catalog.oracleSql
 }

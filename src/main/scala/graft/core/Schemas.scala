@@ -39,22 +39,6 @@ object Par {
 
 import java.sql.Timestamp
 
-/** Declarative field spec, mirroring the reference's `Field` dataclass
-  * (reference: idrt/data.py:55-66). A field is a named group of subfields
-  * normalized to a single fixed-width text column.
-  */
-final case class FieldSpec(field: String, subfields: Seq[String], maxLength: Int)
-
-object FieldSpec {
-  /** Default contact schema (reference: idrt/data.py:69-83). */
-  val name  = FieldSpec("name", Seq("first_name", "last_name"), 50)
-  val email = FieldSpec("email", Seq("email"), 35)
-  val phone = FieldSpec("phone", Seq("phone"), 10)
-  val state = FieldSpec("state", Seq("state"), 2)
-  val zip   = FieldSpec("zip", Seq("zip"), 5)
-  val all: Seq[FieldSpec] = Seq(name, email, phone, state, zip)
-}
-
 /** Common-Crawl-style web page row — the authoritative input shape
   * (BASELINE.json input_hint): url is the primary key, warc_ts drives
   * incremental recompute (plays the reference's contact_timestamp,
@@ -67,26 +51,3 @@ final case class WebPage(
     html: Array[Byte],
     text: String,
     lang: String)
-
-/** Candidate pair emitted by blocking (reference: candidates table,
-  * idrt/algorithm/run_search.py:207-236; class uuid + class_index are
-  * replaced by carrying both keys on one row).
-  */
-final case class CandidatePair(url1: String, url2: String, blockKey: String, dist: Double)
-
-/** Scored pair (reference: duplicates table, idrt/algorithm/run_search.py:515-536). */
-final case class ScoredPair(
-    url1: String,
-    url2: String,
-    lang1: String,
-    lang2: String,
-    score: Double,
-    matches: Boolean,
-    comparison_ts: Timestamp,
-    pipeline_version: String)
-
-/** Final entity assignment — new vs the reference (north rule adds
-  * transitive clustering; the reference stops at the pair table,
-  * idrt/algorithm/run_search.py:524-536).
-  */
-final case class ClusterAssignment(url: String, cluster_id: String)

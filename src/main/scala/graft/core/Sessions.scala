@@ -5,6 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** The one place the measured job shape is built. */
 object Sessions {
 
+  /** Local-mode core count: `SPARK_GRAFT_CPUS` when set, else every core
+    * of this host.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
   /** Local session at `local[cpus]` with the job shape that `graft.Bench`,
     * `graft.ScalingBench` and `PipelineDemo` all measure:
     *   - data-sized shuffle width for AQE plans: start wide (1024) and

@@ -245,15 +245,4 @@ object Similarity {
     when(maxLen === 0, lit(1.0))
       .otherwise(lit(1.0) - levenshtein(a, b).cast("double") / maxLen.cast("double"))
   }
-
-  /** Word-set Jaccard similarity between two texts: |A n B| / |A u B| over
-    * distinct whitespace tokens. Pure built-ins — stays in codegen.
-    */
-  def wordJaccard(a: Column, b: Column): Column = {
-    val wa = array_distinct(split(a, " "))
-    val wb = array_distinct(split(b, " "))
-    val inter = size(array_intersect(wa, wb)).cast("double")
-    val union = size(array_union(wa, wb)).cast("double")
-    when(union === 0, lit(0.0)).otherwise(inter / union)
-  }
 }

@@ -11,7 +11,10 @@ import graft.plans.StageStore
 /** The end-to-end record-linkage pipeline (SURVEY.md par.7.1):
   *
   * ingest -> extract -> normalize -> signatures -> candidates -> scores ->
-  * clusters -> metrics
+  * clusters
+  *
+  * `labeledPairMetrics` and `calibrate` evaluate the scored pairs against
+  * labeled pairs; they are not pipeline stages.
   *
   * Spark-first redesign of the reference's step_1_encode_contacts +
   * step_2_run_search (idrt/algorithm/prepare_data.py:155-235,
@@ -503,29 +506,16 @@ object ErPipeline {
       scored.filter(col("matches")), "url1", "url2")
 
   // -------------------------------------------------------------------
-  // stage 7: metrics — pairwise P/R/F1 vs ground truth (A6)
+  // evaluation: pairwise P/R/F1 against labeled pairs (A6)
   // -------------------------------------------------------------------
 
-  /** truth: (url, truth_cluster). Pairwise decisions are evaluated on the
-    * candidate pairs (i.e. "at matched blocking keys", per the baseline
-    * metric definition).
-    */
-  def pairwiseMetrics(scored: DataFrame, truth: DataFrame): DataFrame = {
-    val t1 = truth.select(col("url").as("url1"), col("truth_cluster").as("tc1"))
-    val t2 = truth.select(col("url").as("url2"), col("truth_cluster").as("tc2"))
-    val labeled = scored.join(t1, "url1").join(t2, "url2")
-      .withColumn("is_dup", col("tc1") === col("tc2"))
-    labeled.agg(
-      sum(when(col("matches") && col("is_dup"), 1L).otherwise(0L)).as("tp"),
-      sum(when(col("matches") && !col("is_dup"), 1L).otherwise(0L)).as("fp"),
-      sum(when(!col("matches") && col("is_dup"), 1L).otherwise(0L)).as("fn"),
-      count(lit(1)).as("n_pairs"))
-      .select(col("tp"), col("fp"), col("fn"), col("n_pairs"),
-        (col("tp") / (col("tp") + col("fp"))).as("precision"),
-        (col("tp") / (col("tp") + col("fn"))).as("recall"))
+  /** Appends precision, recall and f1 to a frame of tp/fp/fn counts. */
+  private def withPrecisionRecallF1(counts: DataFrame): DataFrame =
+    counts
+      .withColumn("precision", col("tp") / (col("tp") + col("fp")))
+      .withColumn("recall", col("tp") / (col("tp") + col("fn")))
       .withColumn("f1",
         lit(2.0) * col("precision") * col("recall") / (col("precision") + col("recall")))
-  }
 
   /** Pairwise P/R/F1 against reference-style labeled pairs (url1, url2,
     * label in {1,-1}) "at matched blocking keys": only labeled pairs that
@@ -538,16 +528,12 @@ object ErPipeline {
       Seq("url1", "url2"), "left")
       .withColumn("pred", coalesce(col("matches"), lit(false)))
       .withColumn("is_dup", col("label") === 1)
-    joined.agg(
+    withPrecisionRecallF1(joined.agg(
       sum(when(col("pred") && col("is_dup"), 1L).otherwise(0L)).as("tp"),
       sum(when(col("pred") && !col("is_dup"), 1L).otherwise(0L)).as("fp"),
       sum(when(!col("pred") && col("is_dup"), 1L).otherwise(0L)).as("fn"),
       sum(when(col("matches").isNull && col("is_dup"), 1L).otherwise(0L)).as("dup_pairs_not_blocked"),
-      count(lit(1)).as("n_pairs"))
-      .withColumn("precision", col("tp") / (col("tp") + col("fp")))
-      .withColumn("recall", col("tp") / (col("tp") + col("fn")))
-      .withColumn("f1",
-        lit(2.0) * col("precision") * col("recall") / (col("precision") + col("recall")))
+      count(lit(1)).as("n_pairs")))
   }
 
   /** Threshold calibration — replaces the reference's val_f1 model
@@ -561,7 +547,7 @@ object ErPipeline {
       .withColumn("score", coalesce(col("score"), lit(0.0))) // unblocked pair -> never matched
       .withColumn("is_dup", col("label") === 1)
     val th = thresholds.map(t => struct(lit(t).as("t"))).toArray
-    labeled
+    val counts = labeled
       .select(col("score"), col("is_dup"), explode(array(th: _*)).as("th"))
       .select(col("th.t").as("threshold"), col("score"), col("is_dup"))
       .groupBy("threshold")
@@ -569,11 +555,7 @@ object ErPipeline {
         sum(when(col("score") >= col("threshold") && col("is_dup"), 1L).otherwise(0L)).as("tp"),
         sum(when(col("score") >= col("threshold") && !col("is_dup"), 1L).otherwise(0L)).as("fp"),
         sum(when(col("score") < col("threshold") && col("is_dup"), 1L).otherwise(0L)).as("fn"))
-      .withColumn("precision", col("tp") / (col("tp") + col("fp")))
-      .withColumn("recall", col("tp") / (col("tp") + col("fn")))
-      .withColumn("f1",
-        lit(2.0) * col("precision") * col("recall") / (col("precision") + col("recall")))
-      .orderBy(col("f1").desc, col("threshold"))
+    withPrecisionRecallF1(counts).orderBy(col("f1").desc, col("threshold"))
   }
 
   // -------------------------------------------------------------------

@@ -14,7 +14,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 200L
     val outRoot = if (args.length > 1) args(1) else "/tmp/graft-er-demo"
-    val cpus = if (args.length > 2) args(2) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = if (args.length > 2) args(2) else Sessions.cpus
     val spark = Sessions.jobShape(cpus)
 
     val t0 = System.nanoTime()

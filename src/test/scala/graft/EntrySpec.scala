@@ -13,9 +13,16 @@ class EntrySpec extends SparkSpec {
   test("SparkEntry.entry returns rows (driver smoke contract)") {
     val n = SparkEntry.entry(spark).count()
     assert(n > 0, "flagship query returned no rows")
-    // every catalog query has either an oracle or an explicit design note
+    // every catalog query has an oracle, and every oracle a query
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(noOracle.isEmpty, s"queries without oracle SQL: $noOracle")
+    val noQuery = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(noQuery.isEmpty, s"oracle SQL without a query: $noQuery")
+    // both maps come from Catalog.all, so a duplicate name there would
+    // silently drop a query from them
+    val names = graft.queries.Catalog.all.map(_.name)
+    assert(names.size === 69 && names.distinct.size === 69,
+      s"Catalog.all must hold 69 distinct names: ${names.diff(names.distinct)}")
   }
 
   test("a pathological hot block generates linear, capped candidates") {

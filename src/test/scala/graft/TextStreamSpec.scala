@@ -20,6 +20,13 @@ class TextStreamSpec extends SparkSpec {
     assert(got === Seq("en", "es", "de", "en"))
   }
 
+  test("countTokens matches tokens literally, not as regex") {
+    // "a.b" as a regex would also match "axb"
+    val n = Seq("a.b axb").toDF("text")
+      .select(TextAnalysis.countTokens($"text", Seq("a.b"))).head().getInt(0)
+    assert(n === 1)
+  }
+
   test("quality features: hand-computed values") {
     val r = Seq("the cat and the hat!!").toDF("text")
       .select(
