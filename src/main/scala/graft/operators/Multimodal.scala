@@ -1,5 +1,7 @@
 package graft.operators
 
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
@@ -23,20 +25,17 @@ import org.apache.spark.sql.functions._
   *    generalized) + per-frame ImageIO JPEG decode — real frame sampling
   *    on a container the JVM genuinely decodes. Containers needing
   *    codecs the JDK lacks (mp4/h264) fail loudly at the RIFF magic.
+  *
+  * Every ImageIO stream here is a `MemoryCacheImageInputStream` /
+  * `MemoryCacheImageOutputStream` over the in-memory payload. ImageIO's
+  * default cache backs a stream with a temp file (one per image, one per
+  * frame on the MJPEG path), and the `ImageIO.setUseCache` switch that
+  * turns it off is JVM-global, so it would change every other ImageIO
+  * user in the process. Payload sizes are bounded by the
+  * decompression-bomb budgets below, so the file cache's one virtue,
+  * spilling huge streams, cannot apply.
   */
 object Multimodal {
-
-  /** ImageIO's default stream cache backs every ImageInputStream /
-    * ImageOutputStream with a TEMP FILE on disk — for the in-memory
-    * byte-array payloads this module decodes (one stream per image, one
-    * per FRAME on the MJPEG path) that is a create+write+read+delete
-    * syscall round trip per decode, pure overhead. The memory cache
-    * decodes the identical bytes to the identical pixels; payload sizes
-    * are already bounded by the decompression-bomb budgets above/below,
-    * so the file cache's only virtue (spilling huge streams) cannot
-    * apply. Measured round 6: part of mm_decode_avi's single-task cost.
-    */
-  locally { javax.imageio.ImageIO.setUseCache(false) }
 
   final case class MediaMeta(kind: String, nBytes: Long, sha: Long)
 
@@ -289,12 +288,9 @@ object Multimodal {
     * decompression bomb never happens.
     */
   def decodeImage(payload: Array[Byte]): java.awt.image.BufferedImage = {
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(payload))
-    // iis must close on EVERY exit — including the no-reader refusal.
-    // Under ImageIO's default file cache each stream holds an open temp
-    // file, so a partition of corrupt payloads that threw before a
-    // try/finally would bleed file descriptors until finalization.
+    val iis = new MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(payload))
+    // iis must close on EVERY exit — including the no-reader refusal — so
+    // a partition of corrupt payloads releases each stream's cache at once.
     try {
       val readers = javax.imageio.ImageIO.getImageReaders(iis)
       require(readers.hasNext, s"undecodable image payload (${payload.length} bytes)")
@@ -333,7 +329,9 @@ object Multimodal {
       y += 1
     }
     val out = new java.io.ByteArrayOutputStream()
-    require(javax.imageio.ImageIO.write(img, format, out), s"no ImageIO writer for $format")
+    val ios = new MemoryCacheImageOutputStream(out)
+    try require(javax.imageio.ImageIO.write(img, format, ios), s"no ImageIO writer for $format")
+    finally ios.close()
     out.toByteArray
   }
 
@@ -377,15 +375,12 @@ object Multimodal {
   }
 
   /** Decode a (doc_id, payload) table of compressed images (png/jpeg/gif)
-    * into dimension + channel-mean stats, batched per partition. ImageIO's
-    * temp-file cache is disabled once per partition — decodes stay
-    * in-memory on the executors.
+    * into dimension + channel-mean stats, batched per partition.
     */
   def decodeImageStats(df: DataFrame): Dataset[ImageStats] = {
     implicit val enc = Encoders.product[ImageStats]
     df.select(col("doc_id").cast("long"), col("payload"))
       .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
         rows.map { r =>
           val img = decodeImage(r.getAs[Array[Byte]]("payload"))
           val (mr, mg, mb) = channelStats(img)
@@ -406,7 +401,7 @@ object Multimodal {
     require(width > 0 && height > 0 && frames > 0,
       s"bad gif shape ${width}x$height x$frames")
     val out = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(out)
+    val ios = new MemoryCacheImageOutputStream(out)
     val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
     try {
       writer.setOutput(ios)
@@ -446,8 +441,7 @@ object Multimodal {
   def decodeGifFrames(payload: Array[Byte]): IndexedSeq[java.awt.image.BufferedImage] = {
     require(payload.length >= 6 &&
       new String(payload, 0, 3, "US-ASCII") == "GIF", "not a GIF (bad magic)")
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(payload))
+    val iis = new MemoryCacheImageInputStream(new java.io.ByteArrayInputStream(payload))
     val readers = javax.imageio.ImageIO.getImageReaders(iis)
     require(readers.hasNext, "no GIF reader")
     val reader = readers.next()
@@ -499,7 +493,6 @@ object Multimodal {
     implicit val enc = Encoders.product[GifStats]
     df.select(col("doc_id").cast("long"), col("payload"))
       .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
         rows.map { r =>
           val frames = decodeGifFrames(r.getAs[Array[Byte]]("payload"))
           val sampled = frames.indices.by(stride).map(frames)
@@ -567,7 +560,7 @@ object Multimodal {
     param.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
     param.setCompressionQuality(0.75f)
     val out = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(out)
+    val ios = new MemoryCacheImageOutputStream(out)
     try {
       writer.setOutput(ios)
       writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
@@ -735,7 +728,6 @@ object Multimodal {
     implicit val enc = Encoders.product[AviStats]
     df.select(col("doc_id").cast("long"), col("payload"))
       .mapPartitions { rows =>
-        javax.imageio.ImageIO.setUseCache(false)
         rows.map { r =>
           val frames = decodeAviFrames(r.getAs[Array[Byte]]("payload"))
           val sampled = frames.indices.by(stride).map(frames)
@@ -772,9 +764,6 @@ object Multimodal {
     }
     df.select(col("doc_id").cast("long"), col("payload"), col("kind"))
       .mapPartitions { rows =>
-        // per-partition batch boundary: decoder context set up once and
-        // reused across the batch (here: ImageIO's temp-file cache off)
-        javax.imageio.ImageIO.setUseCache(false)
         rows.map { r =>
           val payload = r.getAs[Array[Byte]]("payload")
           val kind = r.getString(2)

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * key's row count.
   *
   * Generalized from the ER pipeline's hot-block neighborhood ranking
-  * (ErPipeline.rankWithinBlocks and its giant-block probe call it here) so
-  * sequence packing and other stream-offset operators reuse the same
+  * (ErPipeline.rankWithinBlocks ranks every hot block of `candidates`;
+  * `candidatesPooled` ranks each hot block's merged search+source stream)
+  * so sequence packing and other stream-offset operators reuse the same
   * scale-safe kernel.
   */
 object PrefixSum {

@@ -29,7 +29,8 @@ import graft.plans.StageStore
   * explode-by-blocking-key self-join, keyed by block, (b) the scoring
   * join back to records, keyed by url, and (c) the CC rounds. Hot blocks
   * are bounded by sorted-neighborhood pairing so no key ever goes
-  * quadratic; AQE mops up residual partition skew.
+  * quadratic, and ranked by a distributed prefix sum so no task ever
+  * holds a whole hot key; AQE mops up residual partition skew.
   */
 object ErPipeline {
 
@@ -45,14 +46,6 @@ object ErPipeline {
       // (email/phone) stay far below it.
       maxBlock: Int = 48,
       hotWindow: Int = 6,
-      // Hot blocks above hotRankCap rows stop using the single window
-      // (row_number over one key = every row of the key in ONE task — a
-      // straggler/spill at 10^8-row blocks) and switch to the distributed
-      // rank path (range-partition + per-partition rank + offset join),
-      // which emits the IDENTICAL sorted-neighborhood pairs with no task
-      // ever owning a whole key. The default keeps small/medium blocks on
-      // the cheaper single-window plan.
-      hotRankCap: Int = 65536,
       // 16-bit buckets keep mean occupancy ~n/65k per table; at larger n
       // raise bits ~ log2(n/4) so in-bucket pairing stays linear in n
       lshBits: Int = 16,
@@ -166,8 +159,9 @@ object ErPipeline {
   /** Emit candidate pairs (url1 < url2, F16 canonicalization, G3 corrected
     * self-handling). Blocks up to cfg.maxBlock pair fully; larger (hot)
     * blocks fall back to sorted-neighborhood pairing (each member vs the
-    * next cfg.hotWindow members in url order) so no key is ever quadratic
-    * — the salting/capping strategy of SURVEY.md par.4.
+    * next cfg.hotWindow members in url order, found by a (block, rank)
+    * equi join) so no key is ever quadratic — the salting/capping
+    * strategy of SURVEY.md par.4.
     */
   def candidates(signatures: DataFrame, cfg: Config = Config()): DataFrame =
     candidatesScoped(signatures, None, cfg)
@@ -194,7 +188,7 @@ object ErPipeline {
       signatures: DataFrame, touchedBlocks: Option[DataFrame],
       cfg: Config): DataFrame = {
     // ONE explicit bk-keyed exchange feeds every consumer below (hot-key
-    // sizing agg, cold collect_list agg, hot window) — each would
+    // sizing agg, cold collect_list agg, hot rank) — each would
     // otherwise plan its own exchange, and AQE would coalesce them by
     // MAP-side bytes even though the cold path explodes ~C(block,2)
     // pairs downstream (measured round 6: candidates was 24.7 s of the
@@ -202,7 +196,7 @@ object ErPipeline {
     // coalesced tasks). Explicit width = scheduler width (never a local
     // constant); per-key skew is unchanged vs the implicit exchanges —
     // cold keys are <= maxBlock rows and hot keys already flow through
-    // the windowed/ranked paths built for them.
+    // the ranked path built for them.
     val keyed = keyedBlocks(signatures, touchedBlocks)
       .repartition(graft.core.Par.spread(signatures.sparkSession), col("bk"))
     // Two-phase block sizing that satisfies BOTH measured lessons:
@@ -220,12 +214,12 @@ object ErPipeline {
     // key table is never re-shuffled for sizing, and no window ever
     // counts a whole key in one task.
     val hotKeys = keyed.groupBy("bk").agg(count(lit(1)).as("bk_n"))
-      .filter(col("bk_n") > cfg.maxBlock)
+      .filter(col("bk_n") > cfg.maxBlock).select("bk")
 
     // cold blocks (<= maxBlock members): gather the block into one bounded
     // array and emit all C(n,2) pairs locally — no self-join, no second
     // shuffle. The bound is what makes collect_list safe.
-    val cold = keyed.join(hotKeys.select("bk"), Seq("bk"), "left_anti")
+    val cold = keyed.join(hotKeys, Seq("bk"), "left_anti")
       .groupBy("bk").agg(array_sort(collect_list("url")).as("us"))
       .filter(size(col("us")) >= 2)
     val coldPairs = cold.select(
@@ -238,30 +232,16 @@ object ErPipeline {
       .select(col("block_key"), col("p.url1"), col("p.url2"))
 
     // hot blocks: sorted-neighborhood — each member pairs with the next
-    // hotWindow members in url order; cost is linear in block size.
-    // Small/medium hot blocks rank via one window; blocks above
-    // hotRankCap rank via the distributed path (no whole-key task).
-    val hotAll = keyed.join(hotKeys, Seq("bk")) // small side -> broadcast
-    val hot = hotAll.filter(col("bk_n") <= cfg.hotRankCap)
-      .withColumn("rn", row_number().over(Window.partitionBy("bk").orderBy("url")))
-    val hotPairs = hot.as("a")
-      .join(hot.as("b"), col("a.bk") === col("b.bk")
-        && col("b.rn") > col("a.rn") && col("b.rn") <= col("a.rn") + cfg.hotWindow)
-      .select(col("a.bk").as("block_key"), col("a.url").as("url1"), col("b.url").as("url2"))
-
-    // giant blocks: identical pairs, distributed rank. The neighborhood
-    // probe is an equi join on (bk, rank) — the hot key spreads across
-    // rank values, so neither the ranking nor the pairing ever puts a
-    // whole key into one task (vs the self-join on bk above, which
-    // hash-partitions the whole key to one join partition).
-    val ranked = rankWithinBlocks(hotAll.filter(col("bk_n") > cfg.hotRankCap)
-      .select(col("bk"), col("url")))
-    val giantProbe = ranked.select(col("bk"), col("url").as("url1"),
-      explode(sequence(col("rn") + 1, col("rn") + cfg.hotWindow)).as("rn2"))
-    val giantPairs = giantProbe
-      .join(ranked.select(col("bk"), col("url").as("url2"), col("rn").as("rn2")),
-        Seq("bk", "rn2"))
-      .select(col("bk").as("block_key"), col("url1"), col("url2"))
+    // hotWindow members in url order; cost is linear in block size. The
+    // rank is the distributed prefix sum, so no task ever holds a whole
+    // hot key.
+    val ranked = rankWithinBlocks(
+      keyed.join(hotKeys, Seq("bk"), "left_semi")) // small side -> broadcast
+    val hotPairs = probeNeighbors(
+      ranked.select(col("bk"), col("url").as("url2"), col("rn")),
+      ranked.select(col("bk"), col("url").as("url1"),
+        (col("rn") + 1).as("lo"), (col("rn") + cfg.hotWindow).as("hi")))
+      .withColumnRenamed("bk", "block_key")
 
     // url1-keyed explicit exchange BEFORE the pair dedup: hash clustering
     // on url1 alone satisfies the (url1, url2) grouping requirement (equal
@@ -271,7 +251,7 @@ object ErPipeline {
     // less. Skew bound: a record's pair fan-out is bounded by its block
     // memberships (cold <= maxBlock - 1 per key, hot <= 2*hotWindow per
     // key), never by corpus size.
-    val deduped = coldPairs.unionByName(hotPairs).unionByName(giantPairs)
+    val deduped = coldPairs.unionByName(hotPairs)
       .repartition(graft.core.Par.spread(signatures.sparkSession), col("url1"))
       .groupBy("url1", "url2")
       // A8 dedup, deterministic min; the shared-key count ranks pair
@@ -287,6 +267,20 @@ object ErPipeline {
     */
   private[graft] def rankWithinBlocks(rows: DataFrame): DataFrame =
     PrefixSum.withinKeys(rows, Seq("bk"), Seq("url"), lit(1L), "rn")
+
+  /** Sorted-neighborhood pairs for hot blocks: each probe row
+    * (bk, url1, lo, hi) pairs with every index row (bk, url2, rn) whose
+    * rank lies in [lo, hi] (an empty range pairs with nothing). The probe
+    * is an equi join on (bk, rank): a hot key spreads across rank values,
+    * so no join task ever holds a whole key — unlike a self-join on bk
+    * with a rank-range condition, which tests every pair of a block's
+    * rows in one task. Returns (bk, url1, url2).
+    */
+  private def probeNeighbors(index: DataFrame, probe: DataFrame): DataFrame =
+    probe.filter(col("lo") <= col("hi"))
+      .select(col("bk"), col("url1"), explode(sequence(col("lo"), col("hi"))).as("rn"))
+      .join(index, Seq("bk", "rn"))
+      .select(col("bk"), col("url1"), col("url2"))
 
   /** n_closest-style cap (I4/O4): keep each record's strongest pairs —
     * most shared blocking keys first, url tiebreak. With bothSides, the
@@ -308,15 +302,18 @@ object ErPipeline {
 
   /** G1 Pooled mode: match a source pool against a search pool
     * (reference: run_search.py:34-47; pair order is source-first, NOT
-    * canonicalized — run_search.py:183-193 keeps slots). Unpooled /
+    * canonicalized — run_search.py:183-193 keeps slots). Cold blocks
+    * (search side <= cfg.maxBlock) pair fully bipartite; in a hot block
+    * each source record pairs with the cfg.hotWindow search members on
+    * either side of its own url position. Unpooled /
     * PooledReflective self-matching is `candidates` above. The same
     * n_closest-style cap applies per SOURCE record (the pool the reference
     * caps its ANN lookups for).
     */
   def candidatesPooled(sourceSigs: DataFrame, searchSigs: DataFrame,
       cfg: Config = Config()): DataFrame = {
-    // Materialized once (eager localCheckpoint): up to five plan branches
-    // consume each exploded table (hot sizing, cold anti-join, band semi
+    // Materialized once (eager localCheckpoint): several plan branches
+    // consume each exploded table (hot sizing, cold anti-join, hot semi
     // joins); unmaterialized, every branch would re-evaluate the caller's
     // signature expressions over the whole pool (the same per-branch trap
     // the unpooled path avoids by caching sigs in run()). localCheckpoint
@@ -339,60 +336,33 @@ object ErPipeline {
     // members nearest its own url position, so hot pair volume is
     // O(|src-block| x window) (the reference caps pooled ANN lookups with
     // n_closest BEFORE materializing candidates, run_search.py:148-150).
-    // The window/prefix-sum routing for hot keys bands on the MERGED
-    // stream size (search + source rows): a key with a modest search
-    // side but a giant source pool would otherwise put the whole merged
-    // stream into one window task — source counts are gathered only for
-    // the (few) hot keys, via a semi join against that small table.
     val hotSea = sea.groupBy("bk").agg(count(lit(1)).as("sea_n"))
-      .filter(col("sea_n") > cfg.maxBlock)
-    val hotSrcN = src.join(hotSea.select("bk"), Seq("bk"), "left_semi")
-      .groupBy("bk").agg(count(lit(1)).as("src_n"))
-    val hotSizes = hotSea.join(hotSrcN, Seq("bk"), "left_outer")
-      .withColumn("tot_n", col("sea_n") + coalesce(col("src_n"), lit(0L)))
+      .filter(col("sea_n") > cfg.maxBlock).select("bk")
 
-    val coldPairs = src.join(hotSea.select("bk"), Seq("bk"), "left_anti")
-      .join(sea.join(hotSea.select("bk"), Seq("bk"), "left_anti"), Seq("bk"))
+    val coldPairs = src.join(hotSea, Seq("bk"), "left_anti")
+      .join(sea.join(hotSea, Seq("bk"), "left_anti"), Seq("bk"))
 
     // merged url-ordered stream per hot block (search rows sort before a
-    // source row with the same url): one running sum gives BOTH the
-    // search row's 1-based rank among search rows and the source row's
-    // insertion position, so the probe is a plain (bk, rank) equi join —
-    // no bipartite join on the hot key ever happens. Blocks up to
-    // hotRankCap compute the running sum in one window; bigger blocks go
-    // through the distributed prefix sum (same values, no whole-key
-    // task) — mirroring the unpooled giant-block routing.
-    def probePairs(ranked: DataFrame): DataFrame = {
-      val seaIdx = ranked.filter(col("side") === 0)
-        .select(col("bk"), col("u").as("url2"), col("pos").as("rn"))
-      val srcProbe = ranked.filter(col("side") === 1)
+    // source row with the same url): one distributed running sum gives
+    // BOTH the search row's 1-based rank among search rows and the source
+    // row's insertion position, so the probe is a plain (bk, rank) equi
+    // join — no bipartite join on the hot key ever happens.
+    val merged = sea.join(hotSea, Seq("bk"), "left_semi")
+      .select(col("bk"), col("url2").as("u"), lit(0).as("side"))
+      .unionByName(src.join(hotSea, Seq("bk"), "left_semi")
+        .select(col("bk"), col("url1").as("u"), lit(1).as("side")))
+    val ranked = PrefixSum.withinKeys(
+      merged, Seq("bk"), Seq("u", "side"), lit(1L) - col("side"), "pos")
+    val hotPairs = probeNeighbors(
+      ranked.filter(col("side") === 0)
+        .select(col("bk"), col("u").as("url2"), col("pos").as("rn")),
+      ranked.filter(col("side") === 1)
         .select(col("bk"), col("u").as("url1"),
-          explode(sequence(
-            greatest(lit(1L), col("pos") - cfg.hotWindow + 1),
-            col("pos") + cfg.hotWindow)).as("rn"))
-      srcProbe.join(seaIdx, Seq("bk", "rn"))
-        .select(col("bk"), col("url1"), col("url2"))
-    }
-    def merged(lo: Long, hi: Long): DataFrame = {
-      val band = hotSizes.filter(col("tot_n") > lo && col("tot_n") <= hi).select("bk")
-      sea.join(band, Seq("bk"), "left_semi")
-        .select(col("bk"), col("url2").as("u"), lit(0).as("side"))
-        .unionByName(src.join(band, Seq("bk"), "left_semi")
-          .select(col("bk"), col("url1").as("u"), lit(1).as("side")))
-    }
-    val mw = Window.partitionBy("bk").orderBy(col("u"), col("side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val hotPairs = probePairs(
-      merged(0L, cfg.hotRankCap)
-        .withColumn("pos", sum(lit(1L) - col("side")).over(mw)))
-    val giantPairs = probePairs(
-      PrefixSum.withinKeys(
-        merged(cfg.hotRankCap.toLong, Long.MaxValue),
-        Seq("bk"), Seq("u", "side"), lit(1L) - col("side"), "pos"))
+          greatest(lit(1L), col("pos") - cfg.hotWindow + 1).as("lo"),
+          (col("pos") + cfg.hotWindow).as("hi")))
 
     val deduped = coldPairs.select(col("bk"), col("url1"), col("url2"))
       .unionByName(hotPairs)
-      .unionByName(giantPairs)
       .filter(col("url1") =!= col("url2"))
       .groupBy("url1", "url2")
       .agg(min("bk").as("block_key"), count(lit(1)).as("_n_keys"))

@@ -181,6 +181,20 @@ object Catalog {
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
   }
 
+  /** Oracle of the four ANN recall queries: the exact top-5 row count for
+    * the first 20 query vectors, with recall_ok true (each query asserts
+    * its recall floor on the Spark side).
+    */
+  private val AnnRecallSql: String =
+    """SELECT CAST(count(*) AS BIGINT) AS n, true AS recall_ok FROM (
+      |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+      |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
+      |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
+      |        CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS rk
+      |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
+      |  WHERE a.vec_id < 20)
+      |WHERE rk <= 5""".stripMargin
+
   /** One catalog query: its name (the key in `SparkEntry.queries`), its
     * Spark plan and the DuckDB SQL that must return the same rows.
     */
@@ -1015,14 +1029,7 @@ object Catalog {
         bits = 4, tables = 32)
         .select(col("n"), (col("recall") >= 0.9).as("recall_ok"))
     },
-      """SELECT CAST(count(*) AS BIGINT) AS n, true AS recall_ok FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |        CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS rk
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-        |  WHERE a.vec_id < 20)
-        |WHERE rk <= 5""".stripMargin),
+      AnnRecallSql),
 
     /** IVF-bucketed ANN recall vs the exact baseline (the second scale path
       * complementing LSH: k-means coarse quantizer + nProbe cell probing +
@@ -1039,14 +1046,7 @@ object Catalog {
         cells = 16, nProbe = 8)
         .select(col("n"), (col("recall") >= 0.7).as("recall_ok"))
     },
-      """SELECT CAST(count(*) AS BIGINT) AS n, true AS recall_ok FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |        CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS rk
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-        |  WHERE a.vec_id < 20)
-        |WHERE rk <= 5""".stripMargin),
+      AnnRecallSql),
 
     /** Int8-quantized ANN recall vs the float-exact baseline — the storage
       * lever (4x smaller vectors in memory and shuffles). Same
@@ -1060,14 +1060,7 @@ object Catalog {
       Ann.quantizedRecall(e.filter(col("vec_id") < 20), e, "vec_id", "vec_id", "embedding", 5)
         .select(col("n"), (col("recall") >= 0.9).as("recall_ok"))
     },
-      """SELECT CAST(count(*) AS BIGINT) AS n, true AS recall_ok FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |        CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS rk
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-        |  WHERE a.vec_id < 20)
-        |WHERE rk <= 5""".stripMargin),
+      AnnRecallSql),
 
     /** IVF recall through the PERSISTED index path (AnnIndex): centroids +
       * inverted-file assignments build once as fingerprinted StageStore
@@ -1096,14 +1089,7 @@ object Catalog {
           count(lit(1)).as("n"))
         .select(col("n"), (col("recall") >= 0.7).as("recall_ok"))
     },
-      """SELECT CAST(count(*) AS BIGINT) AS n, true AS recall_ok FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    ROW_NUMBER() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |        CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS rk
-        |  FROM embeddings a JOIN embeddings b ON b.vec_id <> a.vec_id
-        |  WHERE a.vec_id < 20)
-        |WHERE rk <= 5""".stripMargin),
+      AnnRecallSql),
 
     // ---------------------------------------------------------------------
     // Text analysis over documents

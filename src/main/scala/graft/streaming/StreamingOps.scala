@@ -2,6 +2,9 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -56,24 +59,27 @@ object StreamingOps {
     * partitions to aggregate a 2 MB input). Width = input bytes / 32 MB,
     * clamped to [1, session width]: tiny inputs get a handful of state
     * partitions, large inputs keep the operator's configured width —
-    * scale-adaptive, not a local constant. Each operator here creates a
-    * FRESH checkpoint per invocation, so deriving the width per call is
-    * safe (a width is otherwise pinned by an existing checkpoint).
-    * The child session shares the SparkContext but owns its SQLConf, so
-    * concurrent callers never observe the override.
+    * scale-adaptive, not a local constant. The bytes are the content
+    * summary of the path on its own FileSystem (a file, or a directory
+    * tree of any depth, partitioned layouts included); a path whose size
+    * cannot be read keeps the session width rather than guessing small.
+    * Each operator here creates a FRESH checkpoint per invocation, so
+    * deriving the width per call is safe (a width is otherwise pinned by
+    * an existing checkpoint). The child session shares the SparkContext
+    * but owns its SQLConf, so concurrent callers never observe the
+    * override.
     */
-  private def streamSession(spark: SparkSession, inputPath: String): SparkSession = {
+  private[graft] def streamSession(spark: SparkSession, inputPath: String): SparkSession = {
     val sessionWidth =
       try spark.conf.get("spark.sql.shuffle.partitions").toInt
       catch { case _: Throwable => spark.sparkContext.defaultParallelism }
-    val bytes =
+    val width =
       try {
-        val f = new java.io.File(inputPath)
-        if (f.isFile) f.length
-        else Option(f.listFiles()).map(_.filterNot(_.isDirectory).map(_.length).sum)
-          .getOrElse(0L)
-      } catch { case _: Throwable => 0L }
-    val width = math.max(1L, math.min(sessionWidth.toLong, bytes / (32L << 20) + 1)).toInt
+        val p = new Path(inputPath)
+        val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getContentSummary(p).getLength
+        math.max(1L, math.min(sessionWidth.toLong, bytes / (32L << 20) + 1)).toInt
+      } catch { case NonFatal(_) => sessionWidth }
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", width.toString)
     ss
@@ -115,11 +121,12 @@ object StreamingOps {
   private def streamParquet(
       spark: SparkSession, path: String, maxFilesPerTrigger: Option[Int] = None) = {
     val schema = spark.read.parquet(path).schema
-    val f = new java.io.File(path)
+    val p = new Path(path)
     val base = spark.readStream.schema(schema)
     val withMax = maxFilesPerTrigger.fold(base)(m => base.option("maxFilesPerTrigger", m))
-    if (f.isFile || path.endsWith(".parquet"))
-      withMax.option("pathGlobFilter", f.getName).parquet(f.getParent)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isFile ||
+        path.endsWith(".parquet"))
+      withMax.option("pathGlobFilter", p.getName).parquet(p.getParent.toString)
     else withMax.parquet(path)
   }
 

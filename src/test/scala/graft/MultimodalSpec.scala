@@ -244,7 +244,6 @@ class MultimodalSpec extends SparkSpec {
   test("solid-gray JPEG round-trips byte-exactly for EVERY gray value") {
     // the closed-form AVI oracle rests on this: verify all 256 grays, a
     // couple of dims (odd sizes exercise chroma-subsampling edges)
-    javax.imageio.ImageIO.setUseCache(false)
     for (gray <- 0 until 256) {
       val jpeg = Multimodal.encodeJpegSolid(5, 3, gray)
       val img = Multimodal.decodeImage(jpeg)

@@ -142,18 +142,27 @@ class PipelineSpec extends SparkSpec {
     assert(coldOnly.count() === 5L * 10)
   }
 
-  test("giant-block rank is distributed (>1 task per key) and matches the window rank") {
-    import spark.implicits._
-    // one planted 100k-member block: above the default hotRankCap. AQE
-    // sizes range partitions by BYTES (a 100k-row test block is a few MB
-    // and would legitimately coalesce to one partition; a real 10^8-row
-    // block would not) — shrink the advisory size so the test observes
-    // the multi-task split the real scale would produce.
+  /** Run `body` with AQE's advisory partition size shrunk: a test-sized
+    * block is a few KB to MB, which AQE would legitimately coalesce into
+    * one range partition (a real 10^8-row block would not), so the tests
+    * below could not observe the multi-task split real scale produces.
+    */
+  private def withSpreadRanges[T](body: => T): T = {
     val keys = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
       "spark.sql.adaptive.coalescePartitions.minPartitionSize")
     val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
     try {
       keys.foreach(k => spark.conf.set(k, "64k"))
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("giant-block rank is distributed (>1 task per key) and matches the window rank") {
+    // one planted 100k-member block, ranked under spread ranges
+    withSpreadRanges {
       val n = 100000
       val rows = spark.range(n)
         .select(lit("hot:block").as("bk"),
@@ -169,67 +178,125 @@ class PipelineSpec extends SparkSpec {
       assert(mismatch === 0L, "distributed rank diverges from url order")
       assert(ranked.select("rn").distinct().count() === n.toLong)
       ranked.unpersist()
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
+  /** Signature rows (url, block_keys) for a block key -> members map. */
+  private def sigsOf(blocks: Map[String, Seq[String]]) = {
+    import spark.implicits._
+    blocks.toSeq.flatMap { case (k, us) => us.map(_ -> k) }
+      .groupBy(_._1).toSeq
+      .map { case (u, ks) => (u, ks.map(_._2).sorted) }
+      .toDF("url", "block_keys")
+  }
+
+  /** Pair dedup as the pipeline defines it: one row per (url1, url2),
+    * carrying the smallest block key that emitted it.
+    */
+  private def dedupMinKey(pairs: Iterable[(String, String, String)]): Set[Seq[Any]] =
+    pairs.groupBy(p => (p._1, p._2))
+      .map { case ((u1, u2), ps) => Seq[Any](u1, u2, ps.map(_._3).min) }.toSet
+
+  // shuffled names, so url order is not the order members are listed in
+  private val refUrls =
+    new scala.util.Random(11).shuffle((0 until 400).map(i => f"u://$i%04d"))
+  private def take(from: Int, n: Int) = refUrls.slice(from, from + n)
+
+  private def pairsOf(cands: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    cands.select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
+
+  private def assertSamePairs(got: Set[Seq[Any]], expect: Set[Seq[Any]]): Unit = {
+    assert(got === expect,
+      s"missing=${(expect -- got).take(3)} extra=${(got -- expect).take(3)}")
+    assert(expect.nonEmpty)
+  }
+
+  /** Sorted-neighborhood reference for `candidates`: full pairing up to
+    * maxBlock, else each member with its next hotWindow members in url
+    * order (the single-window semantics).
+    */
+  private def scopedRef(blocks: Map[String, Seq[String]], cfg: ErPipeline.Config) =
+    dedupMinKey(blocks.flatMap { case (k, us) =>
+      val s = us.sorted
+      val reach = if (s.size <= cfg.maxBlock) s.size else cfg.hotWindow
+      for (i <- s.indices; j <- i + 1 until math.min(i + 1 + reach, s.size))
+        yield (s(i), s(j), k)
+    })
+
+  /** Reference for `candidatesPooled`: full bipartite join while the
+    * search side is <= maxBlock, else each source pairs with the hotWindow
+    * search members on either side of its url position (search rows sort
+    * before an equal source url); a url in both pools drops its self pair.
+    */
+  private def pooledRef(src: Map[String, Seq[String]], sea: Map[String, Seq[String]],
+      cfg: ErPipeline.Config) =
+    dedupMinKey(src.toSeq.flatMap { case (k, us) =>
+      val s = sea.getOrElse(k, Nil).sorted
+      us.flatMap { u =>
+        val near =
+          if (s.size <= cfg.maxBlock) s
+          else {
+            val pos = s.count(_ <= u)
+            s.slice(math.max(1, pos - cfg.hotWindow + 1) - 1, pos + cfg.hotWindow)
+          }
+        near.filter(_ != u).map(v => (u, v, k))
+      }
+    })
+
+  // Ranks cross range-partition boundaries under withSpreadRanges, so the
+  // prefix-sum offsets are part of what the references check; a zero
+  // window gives hot blocks no neighbors at all.
+
   test("giant-block pairing emits identical pairs to the single-window hot path") {
-    // same sigs, hotRankCap forced low vs high: the distributed path must
-    // reproduce the window path's sorted-neighborhood pairs exactly
-    val sigs = ErPipeline.signatures(
-      ErPipeline.normalize(ErPipeline.extract(pages)), cfg).cache()
-    val small = ErPipeline.Config(maxBlock = 2, hotWindow = 3, hotRankCap = 4)
-    val big = small.copy(hotRankCap = Int.MaxValue)
-    val viaGiant = ErPipeline.candidates(sigs, small)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    val viaWindow = ErPipeline.candidates(sigs, big)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    assert(viaGiant === viaWindow,
-      s"missing=${(viaWindow -- viaGiant).take(3)} extra=${(viaGiant -- viaWindow).take(3)}")
-    assert(viaGiant.nonEmpty)
+    // a block of exactly maxBlock rows and one of maxBlock + 1 sharing two
+    // members, three overlapping hot blocks, and blocks too small to pair
+    val blocks = Map(
+      "b:cold4" -> take(0, 4), "b:hot5" -> take(2, 5), "b:cold2" -> take(7, 2),
+      "b:one" -> take(9, 1), "b:hotA" -> take(10, 30), "b:hotB" -> take(25, 45),
+      "b:hotC" -> take(60, 9))
+    withSpreadRanges {
+      for (w <- Seq(3, 0)) {
+        val cfg = ErPipeline.Config(maxBlock = 4, hotWindow = w)
+        assertSamePairs(pairsOf(ErPipeline.candidates(sigsOf(blocks), cfg)),
+          scopedRef(blocks, cfg))
+      }
+    }
   }
 
   test("pooled giant-block probe emits identical pairs to the pooled window path") {
-    import spark.implicits._
-    // one hot key whose search side exceeds a tiny hotRankCap
-    val srcSigs = (0 until 30)
-      .map(i => (f"src://$i%04d", Seq("hot"))).toDF("url", "block_keys")
-    val seaSigs = (0 until 300)
-      .map(i => (f"sea://$i%04d", Seq("hot"))).toDF("url", "block_keys")
-    val small = ErPipeline.Config(maxBlock = 10, hotWindow = 4, hotRankCap = 50)
-    val big = small.copy(hotRankCap = Int.MaxValue)
-    val viaGiant = ErPipeline.candidatesPooled(srcSigs, seaSigs, small)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    val viaWindow = ErPipeline.candidatesPooled(srcSigs, seaSigs, big)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    assert(viaGiant === viaWindow,
-      s"missing=${(viaWindow -- viaGiant).take(3)} extra=${(viaGiant -- viaWindow).take(3)}")
-    assert(viaGiant.nonEmpty)
-    // still bounded: every source probes <= 2*hotWindow search neighbors
-    assert(viaGiant.size <= 30 * 2 * small.hotWindow)
+    // search sides of exactly maxBlock and maxBlock + 1 rows, a
+    // search-heavy and a source-heavy hot key, keys on one side only, and
+    // urls in both pools
+    val sea = Map(
+      "p:cold4" -> take(100, 4), "p:hot5" -> take(104, 5), "p:srcHeavy" -> take(106, 6),
+      "p:seaHeavy" -> take(120, 50), "p:seaOnly" -> take(170, 7))
+    val src = Map(
+      "p:cold4" -> take(200, 3), "p:hot5" -> (take(203, 2) ++ take(105, 1)),
+      "p:srcHeavy" -> take(200, 70), "p:seaHeavy" -> (take(270, 3) ++ take(130, 2)),
+      "p:srcOnly" -> take(280, 9))
+    withSpreadRanges {
+      for (w <- Seq(3, 0)) {
+        val cfg = ErPipeline.Config(maxBlock = 4, hotWindow = w)
+        val got = pairsOf(ErPipeline.candidatesPooled(sigsOf(src), sigsOf(sea), cfg))
+        assertSamePairs(got, pooledRef(src, sea, cfg))
+        // still bounded: each source probes <= 2*hotWindow search neighbors
+        assert(got.count(_(2) == "p:seaHeavy") <= src("p:seaHeavy").size * 2 * w)
+      }
+    }
   }
 
   test("pooled banding keys on the MERGED size: a giant SOURCE pool routes giant") {
-    import spark.implicits._
-    // search side is hot but modest (30 > maxBlock); the SOURCE side is
-    // what blows past hotRankCap — banding on sea_n alone would put the
-    // whole 330-row merged stream into one window task
-    val srcSigs = (0 until 300)
-      .map(i => (f"src://$i%04d", Seq("hot"))).toDF("url", "block_keys")
-    val seaSigs = (0 until 30)
-      .map(i => (f"sea://$i%04d", Seq("hot"))).toDF("url", "block_keys")
-    val small = ErPipeline.Config(maxBlock = 10, hotWindow = 4, hotRankCap = 50)
-    val big = small.copy(hotRankCap = Int.MaxValue)
-    val viaGiant = ErPipeline.candidatesPooled(srcSigs, seaSigs, small)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    val viaWindow = ErPipeline.candidatesPooled(srcSigs, seaSigs, big)
-      .select("url1", "url2", "block_key").collect().map(_.toSeq).toSet
-    assert(viaGiant === viaWindow,
-      s"missing=${(viaWindow -- viaGiant).take(3)} extra=${(viaGiant -- viaWindow).take(3)}")
-    assert(viaGiant.nonEmpty)
-    assert(viaGiant.size <= 300 * 2 * small.hotWindow)
+    // the search side is hot but modest (30 > maxBlock); the SOURCE side
+    // is ten times larger, and its rows interleave the search rows in url
+    // order, so every source lands somewhere different in the merged stream
+    val src = Map("hot" -> take(0, 300))
+    val sea = Map("hot" -> take(300, 30))
+    val cfg = ErPipeline.Config(maxBlock = 10, hotWindow = 4)
+    withSpreadRanges {
+      val got = pairsOf(ErPipeline.candidatesPooled(sigsOf(src), sigsOf(sea), cfg))
+      assertSamePairs(got, pooledRef(src, sea, cfg))
+      assert(got.size <= 300 * 2 * cfg.hotWindow)
+    }
   }
 
   test("incremental staleRows picks exactly new/updated urls (I1)") {

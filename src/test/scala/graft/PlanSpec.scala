@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+
 import graft.pipeline.ErPipeline
 import graft.sources.WebPageGen
 
@@ -221,9 +224,20 @@ class PlanSpec extends SparkSpec {
     val pages = WebPageGen.pages(spark, 50L).toDF
     val sigs = ErPipeline.signatures(ErPipeline.normalize(ErPipeline.extract(pages)))
     val cands = ErPipeline.candidates(sigs)
-    val p = cands.queryExecution.executedPlan.toString
+    val plan = cands.queryExecution.executedPlan
+    val p = plan.toString
     assert(!p.contains("CartesianProduct"), p.take(600))
     assert(p.contains("AdaptiveSparkPlan"), "AQE should wrap the plan")
+    // hot-block neighbors come from an equi join on (bk, rn): a residual
+    // condition on rn means a join keyed on bk alone that tests every
+    // pair of a block's rows in one task
+    val physical = plan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val rnConds = physical.collect { case j: BaseJoinExec => j.condition }.flatten
+      .filter(_.references.exists(_.name == "rn"))
+    assert(rnConds.isEmpty, s"join with a residual condition on rn: $rnConds")
   }
 
   test("scorePairs joins stay equi (hash/sort-merge) on url keys") {

@@ -173,6 +173,27 @@ class TextStreamSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  test("stream state width follows the bytes of a nested tree; an unreadable path keeps the session width") {
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def width(path: String) =
+      StreamingOps.streamSession(spark, path).conf.get("spark.sql.shuffle.partitions").toInt
+    val root = java.nio.file.Files.createTempDirectory("graft_stream_width")
+    try {
+      // a partitioned layout: two 40 MB (sparse) files one level down, so
+      // a top-level-only listing would see 0 bytes
+      for (k <- Seq("k=1", "k=2")) {
+        val dir = java.nio.file.Files.createDirectories(root.resolve(k))
+        val f = new java.io.RandomAccessFile(dir.resolve("part-0.parquet").toFile, "rw")
+        try f.setLength(40L << 20) finally f.close()
+      }
+      // width = bytes / 32 MB + 1, clamped to [1, session width]
+      assert(width(root.toString) === math.min(sessionWidth, 3))
+      assert(width(root.resolve("k=1/part-0.parquet").toString) === math.min(sessionWidth, 2))
+      assert(width(root.resolve("missing").toString) === sessionWidth)
+      assert(width("nosuchfs://host/events.parquet") === sessionWidth)
+    } finally graft.core.Fs.deleteRecursively(root)
+  }
+
   test("streaming wrappers land in a file sink, never a driver memory table") {
     val path = "/root/testdata/sf0.001/events.parquet"
     for (run <- Seq(
