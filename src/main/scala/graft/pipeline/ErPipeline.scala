@@ -422,12 +422,18 @@ object ErPipeline {
     // join only shuffles the feature side (a caller passing arbitrary
     // pairs still gets a correct co-partitioning exchange from the
     // planner)
+    // The url2 join's feature side gets the same explicit width. Left to
+    // the planner, EnsureRequirements widens both url2 exchanges, the
+    // explicit one included, to AQE's initial partition number (1024);
+    // AQE restores w only if it turns the join into a broadcast, and that
+    // depends on which stage finishes first.
     val w = graft.core.Par.spread(cands.sparkSession)
     val withBoth = cands
       .join(lhs.withColumnRenamed("url1", "url1_"), col("url1") === col("url1_"))
       .drop("url1_")
       .repartition(w, col("url2"))
-      .join(rhs.withColumnRenamed("url2", "url2_"), col("url2") === col("url2_"))
+      .join(rhs.withColumnRenamed("url2", "url2_").repartition(w, col("url2_")),
+        col("url2") === col("url2_"))
       .drop("url2_")
 
     withBoth.select(
@@ -548,16 +554,17 @@ object ErPipeline {
         */
       clusterEdgesReclustered: Long = -1L, clusterEdgesTotal: Long = -1L)
 
-  /** Incremental transitive clustering: a component's assignment is
-    * invariant unless one of its nodes gained, lost, or re-scored an edge
-    * — reused match edges are intra-cluster by construction (they WERE
-    * edges of the prior CC), and every re-scored/dropped edge has both
-    * endpoints in `affectedNodes`, so no current edge can connect an
-    * affected cluster to an unaffected one. Prior assignments of clusters
-    * holding no affected node are reused verbatim (their min-id roots are
-    * untouched); only members of affected clusters plus brand-new nodes
-    * re-converge, over only the edges that touch them. Returns
-    * (clusters, edges re-clustered, total current edges).
+  /** Incremental transitive clustering. Invariant: every current match
+    * edge has both endpoints inside affected clusters or neither. Reused
+    * edges were prior match edges, so both endpoints share a prior
+    * cluster; every re-scored edge has both endpoints in `affectedNodes`;
+    * a prior edge a stale record dropped lies inside that record's prior
+    * cluster, which is affected through the record itself. So prior
+    * assignments of clusters holding no affected node are reused verbatim
+    * (their min-id roots are untouched), and only members of affected
+    * clusters plus brand-new nodes re-converge, over the edges that
+    * touch them. Returns (clusters, edges re-clustered, total current
+    * edges).
     */
   private[graft] def incrementalClusters(
       mergedSigs: DataFrame,
@@ -575,28 +582,14 @@ object ErPipeline {
       .select(col("url"), col("cluster_id"))
     val reVertices = mergedSigs.select(col("url"))
       .join(reusedAssign.select(col("url")), Seq("url"), "left_anti")
-      .cache()
+      .localCheckpoint()
     val edges = mergedScored.filter(col("matches")).select("url1", "url2")
-    // both-endpoint semi joins + distinct for robustness, though the
-    // invariant above means either side alone would select the same set
+    // by the invariant, an edge with url1 re-clustering has url2 too
     val touchingEdges = edges
       .join(reVertices.withColumnRenamed("url", "url1"), Seq("url1"), "left_semi")
-      .unionByName(edges
-        .join(reVertices.withColumnRenamed("url", "url2"), Seq("url2"), "left_semi"))
-      .distinct()
-      .cache()
+      .localCheckpoint()
     val re = Clustering.clusterAll(reVertices, "url", touchingEdges, "url1", "url2")
-    val nTouching = touchingEdges.count()
-    val nEdges = edges.count()
-    // the CC inside clusterAll has already consumed both caches eagerly
-    // (its edge set is localCheckpointed on entry); release them so
-    // repeated incremental runs in a long-lived driver don't accumulate
-    // cached blocks (ADVICE r5). The returned plan can still recompute
-    // reVertices lazily from the (cached) merged signatures — correct,
-    // just no longer pinned.
-    touchingEdges.unpersist()
-    reVertices.unpersist()
-    (reusedAssign.unionByName(re), nTouching, nEdges)
+    (reusedAssign.unionByName(re), touchingEdges.count(), edges.count())
   }
 
   /** Incremental run (I1 + I2 end-to-end): given the previous run's
@@ -614,7 +607,12 @@ object ErPipeline {
     * comparisons table across runs, run_search.py:416-434). With
     * `priorClusters` supplied, clustering is incremental too (see
     * incrementalClusters); without it the merged pair table re-clusters
-    * globally.
+    * globally. `priorClusters` must be the clusters of the same run as
+    * `priorSignatures` and `priorScored`.
+    *
+    * The inputs are read several times, so pass materialized frames
+    * (checkpointed, cached or read from storage). The returned frames are
+    * checkpointed; the caller has nothing to release.
     *
     * With cfg.batchLimit > 0, at most batchLimit stale rows are processed,
     * oldest warc_ts first (url tiebreak) — the reference's per-run cap
@@ -627,18 +625,25 @@ object ErPipeline {
       priorScored: DataFrame,
       cfg: Config,
       priorClusters: Option[DataFrame] = None): (Result, IncrementalStats) = {
-    val prior = priorSignatures.cache()
-    val staleAll = staleRows(pages, prior.select(col("url"), col("warc_ts")), "url", "warc_ts")
+    val staleAll = staleRows(pages, priorSignatures.select(col("url"), col("warc_ts")),
+      "url", "warc_ts")
+    // Every engine-computed intermediate read more than once below is
+    // materialized with an eager localCheckpoint, not cache(): a cached
+    // relation keeps its final shuffle at initialPartitionNum (Spark's
+    // CacheManager turns final-stage coalescing off), so under the
+    // job-shape session each fill and each scan of a cache runs 1,024
+    // tasks. Checkpoint blocks are released by the ContextCleaner once
+    // the frames are dropped, so nothing here needs releasing by hand.
     val stale =
       (if (cfg.batchLimit > 0) staleAll.orderBy(col("warc_ts"), col("url")).limit(cfg.batchLimit)
-       else staleAll).cache()
+       else staleAll).localCheckpoint()
     val nStale = stale.count()
 
     val staleSigs = signatures(normalize(extract(stale)), cfg)
-    val mergedSigs = prior
+    val mergedSigs = priorSignatures
       .join(stale.select("url"), Seq("url"), "left_anti")
       .unionByName(staleSigs)
-      .cache()
+      .localCheckpoint()
 
     val staleUrls = stale.select(col("url"))
     // O(stale) candidate generation, not O(corpus): only blocks TOUCHED by
@@ -655,7 +660,7 @@ object ErPipeline {
     // capped config falls back to the full recompute for exact parity.
     val allCands =
       if (cfg.maxCandidatesPerRecord == 0) {
-        val touched = prior
+        val touched = priorSignatures
           .join(staleUrls, Seq("url"), "left_semi")
           .select(explode(col("block_keys")).as("bk"))
           .unionByName(staleSigs.select(explode(col("block_keys")).as("bk")))
@@ -666,51 +671,32 @@ object ErPipeline {
     val reused = priorScored
       .join(staleUrls.withColumnRenamed("url", "url1"), Seq("url1"), "left_anti")
       .join(staleUrls.withColumnRenamed("url", "url2"), Seq("url2"), "left_anti")
-      .cache()
-    // to score: every current candidate not covered by a reusable score.
-    // Cached: rescoring, the affected-node set (twice), and
-    // Result.candidates all consume it — uncached, each would re-run the
-    // whole scoped candidate DAG.
+      .localCheckpoint()
+    // to score: every current candidate not covered by a reusable score
     val toScore = allCands
       .join(reused.select("url1", "url2"), Seq("url1", "url2"), "left_anti")
-      .cache()
+      .localCheckpoint()
     val rescored = scorePairs(toScore, mergedSigs, cfg)
 
     val mergedScored = reused
       .select(rescored.columns.map(col): _*)
       .unionByName(rescored)
-      .cache()
+      .localCheckpoint()
 
     val (clustered, nReEdges, nEdges) = priorClusters match {
       case Some(pc) =>
-        // affected = stale records + endpoints of every re-scored pair +
-        // partners of prior match edges a stale record took away (those
-        // components may SPLIT, so the surviving partner must re-cluster)
-        val droppedPartners = priorScored.filter(col("matches"))
-          .join(staleUrls.withColumnRenamed("url", "url1"), Seq("url1"), "left_semi")
-          .select(col("url2").as("url"))
-          .unionByName(priorScored.filter(col("matches"))
-            .join(staleUrls.withColumnRenamed("url", "url2"), Seq("url2"), "left_semi")
-            .select(col("url1").as("url")))
+        // affected = stale records + endpoints of every re-scored pair
         val affectedNodes = staleUrls
           .unionByName(toScore.select(col("url1").as("url")))
           .unionByName(toScore.select(col("url2").as("url")))
-          .unionByName(droppedPartners)
         incrementalClusters(mergedSigs, mergedScored, pc, affectedNodes)
       case None =>
         (clusters(mergedSigs, mergedScored), -1L, -1L)
     }
-    val stats = IncrementalStats(nStale, rescored.count(), reused.count(),
+    // mergedScored is the bag union of reused and rescored
+    val nReused = reused.count()
+    val stats = IncrementalStats(nStale, mergedScored.count() - nReused, nReused,
       nReEdges, nEdges)
-    // every consumer of these intermediates has materialized by now (the
-    // stats counts and the clustering pass populated the downstream
-    // caches that are returned in Result); release them so repeated
-    // incremental runs don't accumulate cached blocks (ADVICE r5).
-    // mergedSigs / toScore / mergedScored stay cached — they ARE the
-    // returned Result.
-    prior.unpersist()
-    stale.unpersist()
-    reused.unpersist()
     (Result(mergedSigs, mergedSigs, toScore, mergedScored, clustered), stats)
   }
 

@@ -1,69 +1,145 @@
 package graft
 
+import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.WebPage
 import graft.pipeline.ErPipeline
 import graft.sources.WebPageGen
+import graft.sources.WebPageGen.{Contact, LabeledPage}
 
 /** SURVEY.md par.5 item 5: an incremental re-run with m updated rows
   * re-scores only the affected pairs and produces exactly the same final
-  * state a full recompute would.
+  * state a full recompute would: across deltas that bump timestamps, add
+  * entities, split a cluster and join two, with and without prior
+  * clusters and under a batch cap.
   */
 class IncrementalSpec extends SparkSpec {
+  import IncrementalSpec._
+
+  private val Seed = 42L
+  private val Day = 24L * 3600L * 1000L
+
+  private def webPage(p: LabeledPage): WebPage = WebPage(p.url, p.warc_ts, p.html, p.text, p.lang)
+
+  /** The generated page of (entity, variant) one day later, its card
+    * rewritten to `contact` when given.
+    */
+  private def later(id: Long, variant: String, contact: Option[Contact] = None): WebPage = {
+    val p = webPage(WebPageGen.labeledPage(Seed, id, WebPageGen.Variants.indexWhere(_._1 == variant)))
+    val html = contact.fold(p.html)(WebPageGen.htmlFor(_, id, variant).getBytes("UTF-8"))
+    p.copy(warc_ts = new Timestamp(p.warc_ts.getTime + Day), html = html,
+      text = WebPageGen.extractTextJvm(new String(html, "UTF-8")))
+  }
+
+  /** All pages of entities `from until until`, as generated. */
+  private def entities(from: Long, until: Long): Seq[WebPage] =
+    for (id <- from until until; v <- WebPageGen.Variants.indices)
+      yield webPage(WebPageGen.labeledPage(Seed, id, v))
+
+  /** `base` with `changed` replacing the pages of the same url and adding
+    * the rest.
+    */
+  private def snapshot(base: DataFrame, changed: Seq[WebPage]): DataFrame = {
+    val delta = spark.createDataFrame(changed)
+    base.join(delta.select("url"), Seq("url"), "left_anti").unionByName(delta).localCheckpoint()
+  }
+
+  private def pairsOf(scored: DataFrame): Set[(String, String, Double, Boolean)] =
+    scored.select("url1", "url2", "score", "matches").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getBoolean(3))).toSet
+
+  private def clustersOf(clusters: DataFrame): Set[(String, String)] =
+    clusters.collect().map(r => (r.getString(0), r.getString(1))).toSet
+
+  /** Reports set differences, not the sets: a failure names a few rows. */
+  private def assertSame[A](what: String, inc: Set[A], full: Set[A]): Unit = {
+    val (missing, extra) = (full -- inc, inc -- full)
+    if (missing.nonEmpty || extra.nonEmpty)
+      fail(s"$what differ from a full run: missing=${missing.take(3)} extra=${extra.take(3)}")
+  }
 
   test("incremental run rescoring == full recompute; untouched pairs reused") {
     val cfg = ErPipeline.Config()
-    val pages0 = WebPageGen.pages(spark, 80L).toDF.cache()
+    val pages0 = WebPageGen.pages(spark, 80L, Seed).toDF.localCheckpoint()
     val full0 = ErPipeline.run(spark, pages0, cfg)
-    val sigs0 = full0.signatures.cache()
-    val scored0 = full0.scored.cache()
-    scored0.count()
+    val sigs0 = full0.signatures.localCheckpoint()
+    val scored0 = full0.scored.localCheckpoint()
+    val clusters0 = full0.clusters.localCheckpoint()
+    def nClusters(c: DataFrame): Long = c.select("cluster_id").distinct().count()
+    assert(nClusters(clusters0) === 320L)
 
-    // new snapshot: 10 entities' base pages get a bumped warc_ts (their
-    // html/text are regenerated identically -> scores must not change
-    // values, but those pairs MUST be re-scored), plus 5 brand-new entities
-    val bumped = pages0
-      .filter(col("url").endsWith("/base") && col("url").contains("/profile/1"))
-      .withColumn("warc_ts", col("warc_ts") + expr("INTERVAL 1 DAY"))
-    val newEntities = WebPageGen.pages(spark, 85L).toDF
-      .join(pages0.select("url"), Seq("url"), "left_anti")
-    val pages1 = pages0
-      .join(bumped.select("url"), Seq("url"), "left_anti")
-      .unionByName(bumped)
-      .unionByName(newEntities)
-      .cache()
+    // identical html/text under a bumped warc_ts: scores must not change
+    // values, but those pairs MUST be re-scored
+    val bumped = (0L until 80L).filter(_.toString.startsWith("1")).map(later(_, "base"))
+    // split: a base page turns into an unrelated contact under the same url
+    val split = (1L to 6L).map(id => later(id, "base", Some(WebPageGen.baseContact(Seed + 1, 1000L + id))))
+    // join: one entity's email page takes another entity's phone, state and zip
+    val joined = Seq(20L -> 21L, 30L -> 31L, 40L -> 41L).map { case (a, b) =>
+      val other = WebPageGen.baseContact(Seed, b)
+      later(a, "r4a-email", Some(WebPageGen.baseContact(Seed, a)
+        .copy(phone = other.phone, state = other.state, zip = other.zip)))
+    }
+    val mixed = split ++ joined ++ entities(80L, 83L)
+    val deltas = Seq(
+      Delta("(a) bumped timestamps + 5 new entities", bumped ++ entities(80L, 85L), 340L),
+      Delta("(b) split", split, 326L),
+      Delta("(c) join", joined, 317L),
+      Delta("(d) split + join + 3 new entities", mixed, 335L),
+      // the 4 oldest stale rows are the split bases of entities 1-4
+      Delta("(e) (d) at batchLimit 4", mixed, 324L, batchLimit = 4, processed = Some(split.take(4))))
 
-    val clusters0 = full0.clusters.cache()
-    clusters0.count()
-    val (inc, stats) = ErPipeline.runIncremental(spark, pages1, sigs0, scored0, cfg,
-      priorClusters = Some(clusters0))
-    info(s"stale=${stats.staleRowCount} rescored=${stats.rescoredPairs} " +
-      s"reused=${stats.reusedPairs} reclusteredEdges=${stats.clusterEdgesReclustered}" +
-      s"/${stats.clusterEdgesTotal}")
-    // incremental clustering re-converges only the affected subgraph:
-    // the CC input must shrink vs the full edge set
-    assert(stats.clusterEdgesReclustered >= 0L
-      && stats.clusterEdgesReclustered < stats.clusterEdgesTotal,
-      s"CC input did not shrink: ${stats.clusterEdgesReclustered}/${stats.clusterEdgesTotal}")
+    val counter = new TaskCounter
+    spark.sparkContext.addSparkListener(counter)
+    try deltas.foreach { d =>
+      val pages1 = snapshot(pages0, d.changed)
+      val processed = d.processed.getOrElse(d.changed)
+      val fullRes = ErPipeline.run(spark, snapshot(pages0, processed), cfg)
+      assert(nClusters(fullRes.clusters) === d.clusters, s"${d.name}: precondition")
+      val fullPairs = pairsOf(fullRes.scored)
+      val fullClusters = clustersOf(fullRes.clusters)
 
-    // stale set = bumped bases + all pages of the 5 new entities
-    assert(stats.staleRowCount === bumped.count() + newEntities.count())
-    assert(stats.reusedPairs > 0, "unchanged pairs must be reused, not recomputed")
-
-    // equivalence with a full recompute on the new snapshot
-    val fullRes = ErPipeline.run(spark, pages1, cfg)
-    val incPairs = inc.scored.select("url1", "url2", "score", "matches")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getBoolean(3)))
-      .toSet
-    val fullPairs = fullRes.scored.select("url1", "url2", "score", "matches")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2), r.getBoolean(3)))
-      .toSet
-    assert(incPairs === fullPairs,
-      s"missing=${(fullPairs -- incPairs).take(3)} extra=${(incPairs -- fullPairs).take(3)}")
-
-    val incClusters = inc.clusters.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val fullClusters = fullRes.clusters.collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(incClusters === fullClusters)
+      for (prior <- Seq(Some(clusters0), None)) {
+        val path = s"${d.name}, prior clusters ${if (prior.isDefined) "reused" else "recomputed"}"
+        ListenerBusDrain(spark.sparkContext)
+        counter.reset()
+        val (inc, stats) = ErPipeline.runIncremental(spark, pages1, sigs0, scored0,
+          cfg.copy(batchLimit = d.batchLimit), prior)
+        val incClusters = clustersOf(inc.clusters)
+        ListenerBusDrain(spark.sparkContext)
+        val jobs = counter.counts
+        val tasks = jobs.values.sum
+        info(s"$path: stale=${stats.staleRowCount} rescored=${stats.rescoredPairs} " +
+          s"reused=${stats.reusedPairs} reclusteredEdges=${stats.clusterEdgesReclustered}" +
+          s"/${stats.clusterEdgesTotal} jobs=${jobs.size} tasks=$tasks")
+        if ((d eq deltas.head) && prior.isDefined) {
+          // the job shape keeps a cached shuffle at 1,024 partitions; the
+          // incremental path must not pay that per intermediate
+          assert(tasks <= 1000L, s"$path: $tasks tasks in ${jobs.size} jobs, " +
+            s"largest ${jobs.toSeq.sortBy(-_._2).take(5).mkString(", ")}")
+        }
+        if (prior.isDefined) {
+          // incremental clustering re-converges only the affected subgraph:
+          // the CC input must shrink vs the full edge set
+          assert(stats.clusterEdgesReclustered >= 0L
+            && stats.clusterEdgesReclustered < stats.clusterEdgesTotal,
+            s"$path: CC input did not shrink: " +
+              s"${stats.clusterEdgesReclustered}/${stats.clusterEdgesTotal}")
+        }
+        assert(stats.staleRowCount === processed.size.toLong, path)
+        assert(stats.reusedPairs > 0, s"$path: unchanged pairs must be reused, not recomputed")
+        assertSame(s"$path: scored pairs", pairsOf(inc.scored), fullPairs)
+        assertSame(s"$path: clusters", incClusters, fullClusters)
+      }
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 
   test("incremental candidate generation keys O(stale-touched blocks), not O(corpus)") {
@@ -136,5 +212,33 @@ class IncrementalSpec extends SparkSpec {
     }
     assert(processed === Seq(5L, 5L, 2L),
       s"12 rows at batchLimit=5 should drain oldest-first in 3 rounds, got $processed")
+  }
+}
+
+object IncrementalSpec {
+
+  /** One delta of the 80-entity corpus: the snapshot replaces or adds the
+    * `changed` pages; the run processes `processed` of them (all unless
+    * batchLimit caps it); a full run of the processed snapshot has
+    * `clusters` clusters.
+    */
+  final case class Delta(name: String, changed: Seq[WebPage], clusters: Long,
+      batchLimit: Int = 0, processed: Option[Seq[WebPage]] = None)
+
+  /** Counts tasks per job between `reset` and `counts`. */
+  final class TaskCounter extends SparkListener {
+    private val jobOfStage = new ConcurrentHashMap[Int, String]()
+    private val tasksOfJob = new ConcurrentHashMap[String, AtomicLong]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      // the result stage, the highest id, is named after the action's call site
+      val job = s"job ${e.jobId} (${e.stageInfos.maxByOption(_.stageId).fold("no stage")(_.name)})"
+      tasksOfJob.putIfAbsent(job, new AtomicLong())
+      e.stageIds.foreach(jobOfStage.put(_, job))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(jobOfStage.get(e.stageId))
+        .foreach(tasksOfJob.computeIfAbsent(_, _ => new AtomicLong()).incrementAndGet())
+    def reset(): Unit = { jobOfStage.clear(); tasksOfJob.clear() }
+    def counts: Map[String, Long] = tasksOfJob.asScala.map { case (j, n) => j -> n.get }.toMap
   }
 }
