@@ -1,13 +1,15 @@
 package graft.plans
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, XxHash64}
 import org.apache.spark.sql.functions._
 
 /** Checkpointed stage tables with per-partition lineage + metrics —
@@ -19,6 +21,14 @@ import org.apache.spark.sql.functions._
   * per-partition row counts/checksums. A re-run whose (version, inputs,
   * params) fingerprint matches the manifest skips the stage and reads the
   * parquet back — i.e. kill-at-stage-k resumes at k+1.
+  *
+  * A commit is the stage's write job and no other job, with writer-side
+  * file stats as in Iceberg's commit protocol: the write tasks fold each
+  * part file's (rows, checksum) while writing it, the stage's data
+  * directory is then listed, and the manifest is written to a temp file
+  * and renamed into place last, all on the root's Hadoop `FileSystem`.
+  * The stage is not read back to compute its stats; the read side
+  * recomputes them from the files before it resumes.
   *
   * This sandbox has no Iceberg runtime (SURVEY.md par.7.4); the manifest
   * emulates the snapshot metadata an Iceberg table would carry, behind
@@ -80,19 +90,31 @@ object StageStore {
   }
 
   private def manifestPath(root: String, stage: String) =
-    Paths.get(root, stage, "manifest.json")
+    new Path(root, s"$stage/manifest.json")
 
   private def dataPath(root: String, stage: String) =
     s"$root/$stage/data.parquet"
 
+  /** The file system of a stage root. Hadoop's local one is used without
+    * its checksum layer: that layer would add `.crc` sidecars to manifests,
+    * and a manifest is checked by parsing it.
+    */
+  private[graft] def fileSystem(spark: SparkSession, root: String): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
   /** None when the stage has no manifest, or one that is not a manifest
     * (the stage is then recomputed and the manifest rewritten).
     */
-  def readManifest(root: String, stage: String): Option[Manifest] = {
+  private[graft] def readManifest(fs: FileSystem, root: String, stage: String): Option[Manifest] = {
     val p = manifestPath(root, stage)
-    if (!Files.exists(p)) return None
+    if (!fs.exists(p)) return None
+    val in = fs.open(p)
+    val bytes = try in.readAllBytes() finally in.close()
     val j =
-      try Json.readTree(Files.readAllBytes(p))
+      try Json.readTree(bytes)
       catch { case _: JsonProcessingException => return None }
     def text(name: String): Option[String] =
       Option(j.get(name)).filter(_.isTextual).map(_.asText)
@@ -110,6 +132,20 @@ object StageStore {
       fileKeyedStats = j.path("stat_keying").asText == "file")
   }
 
+  /** Temp file, then rename: a reader sees the old manifest or the new
+    * one, never a partial one. Where a rename does not replace an existing
+    * file, the old manifest is deleted first; a kill in between leaves no
+    * manifest, and the stage is recomputed.
+    */
+  private def writeManifest(fs: FileSystem, root: String, stage: String, json: String): Unit = {
+    val dst = manifestPath(root, stage)
+    val tmp = new Path(root, s"$stage/manifest.json.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    if (!fs.rename(tmp, dst) && !(fs.delete(dst, false) && fs.rename(tmp, dst)))
+      throw new java.io.IOException(s"could not rename $tmp to $dst")
+  }
+
   private val PartIdx = "part-(\\d+)".r
 
   /** Per-file (row count, xor of row hashes) aggregate over a stage's
@@ -119,7 +155,7 @@ object StageStore {
     * input_file_name (not spark_partition_id) keeps the key stable even
     * when a large part file splits into several read partitions.
     */
-  private def fileStats(df: DataFrame): Array[(Int, String, Long, Long)] =
+  private[graft] def fileStats(df: DataFrame): Array[(Int, String, Long, Long)] =
     df.groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n"),
         coalesce(bit_xor(xxhash64(df.columns.map(col): _*)), lit(0L)).as("x"))
@@ -141,7 +177,9 @@ object StageStore {
     * column-complete pass over the stage data; no recompute of the stage.
     */
   private def verifyLineage(df: DataFrame, m: Manifest, root: String, stage: String): Unit = {
-    if (m.partitions.isEmpty) return // legacy manifest without stats
+    // legacy manifest without stats; a file-keyed one without stats is a
+    // zero-row stage, whose files must then hold no rows
+    if (m.partitions.isEmpty && !m.fileKeyedStats) return
     if (!m.fileKeyedStats) {
       // pre-file-keying manifest (stats keyed by read-partition id): the
       // per-stat keys don't align with part files, but the XOR of all
@@ -189,8 +227,51 @@ object StageStore {
   private def fullFingerprint(inputsFp: String, params: Map[String, String]): String =
     inputsFp + "|" + params.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
 
+  /** Writes `out` as the stage's parquet in one job and returns each
+    * non-empty part file's (index, rows, checksum), folded by the write
+    * tasks as they consume their rows. A write task's partition index is
+    * its `part-NNNNN` file index. The checksum is the xor of
+    * `xxhash64(all columns)`, the value `fileStats` recomputes on read.
+    * Stats are keyed by partition, so a retried task counts once.
+    */
+  private def writeWithStats(
+      spark: SparkSession, out: DataFrame, path: String): Seq[PartitionStat] = {
+    val hash = new XxHash64(out.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, nullable = true)
+    })
+    val acc = spark.sparkContext.collectionAccumulator[PartitionStat]
+    val rows = out.queryExecution.toRdd.mapPartitionsWithIndex { (idx, it) =>
+      val h = UnsafeProjection.create(Seq(hash))
+      var n = 0L
+      var x = 0L
+      var done = false
+      new Iterator[InternalRow] {
+        def hasNext: Boolean = {
+          val more = it.hasNext
+          if (!more && !done) {
+            done = true
+            if (n > 0) acc.add(PartitionStat(idx, n, x))
+          }
+          more
+        }
+        def next(): InternalRow = {
+          val r = it.next()
+          n += 1
+          x ^= h(r).getLong(0)
+          r
+        }
+      }
+    }
+    GraftBridge.dataFrame(spark, rows, out.schema).write.mode("overwrite").parquet(path)
+    acc.value.asScala.map(p => p.partition -> p).toMap.values.toSeq.sortBy(_.partition)
+  }
+
   /** Run (or resume) one stage. `compute` is only invoked when the stored
-    * manifest does not match (version, inputs, params).
+    * manifest does not match (version, inputs, params). A computed stage
+    * is committed by its write job alone: its per-part-file lineage stats
+    * are taken while it is written, its data directory is listed on the
+    * root's `FileSystem`, and the manifest is renamed into place last. The
+    * returned frame reads the written parquet with the computed schema.
     */
   def runStage(
       spark: SparkSession,
@@ -200,9 +281,11 @@ object StageStore {
       inputsFingerprint: String,
       params: Map[String, String] = Map.empty)(compute: => DataFrame): DataFrame = {
     val fp = fullFingerprint(inputsFingerprint, params)
-    readManifest(root, stage) match {
+    val fs = fileSystem(spark, root)
+    val path = dataPath(root, stage)
+    readManifest(fs, root, stage) match {
       case Some(m) if m.pipelineVersion == pipelineVersion && m.inputsFingerprint == fp =>
-        val df = spark.read.parquet(dataPath(root, stage))
+        val df = spark.read.parquet(path)
         verifyLineage(df, m, root, stage)
         df
       case Some(m) if m.pipelineVersion != pipelineVersion =>
@@ -213,39 +296,51 @@ object StageStore {
       case _ =>
         val t0 = System.nanoTime()
         val out = compute
-        out.write.mode("overwrite").parquet(dataPath(root, stage))
-        val written = spark.read.parquet(dataPath(root, stage))
-        // keyed by part-file index (see fileStats) so the read-side verify
-        // can localize a mismatch to a named file; empty partitions write
-        // rowless part files and are correctly absent on both sides
-        val rawStats = fileStats(written)
-        // write-time guard: an unparsable or duplicate part index would
-        // collapse keys in the read-side expect map and make every later
-        // resume of INTACT data refuse as "corrupted" — fail loudly now,
-        // at write time, naming the files, instead
-        rawStats.filter(_._1 < 0).foreach { case (_, file, _, _) =>
+        // the overwrite deletes the stage's old files before the write
+        // tasks read `out`'s input, so a compute that reads this stage's
+        // own files would lose them; Spark does not refuse that for a
+        // path write, so refuse here, before anything is deleted
+        val dir = fs.makeQualified(new Path(path))
+        out.inputFiles.find { f =>
+          Iterator.iterate(new Path(new java.net.URI(f)))(_.getParent)
+            .takeWhile(_ != null).contains(dir)
+        }.foreach { f =>
+          throw new IllegalArgumentException(
+            s"stage '$stage' cannot overwrite $dir: its compute reads $f from it")
+        }
+        val stats = writeWithStats(spark, out, path)
+        // write-time guards, from one listing of the data directory: an
+        // unparsable or duplicate part index would collapse keys in the
+        // read-side expect map and make every later resume of INTACT data
+        // refuse as "corrupted", and a partition with rows but no file
+        // would be recorded yet never be readable — fail loudly now,
+        // naming the files, instead. Names starting with '_' or '.' are
+        // not data files (Spark's reader skips them too).
+        val files = fs.listStatus(dir).toSeq.map(_.getPath.getName)
+          .filterNot(n => n.startsWith("_") || n.startsWith("."))
+          .map(n => PartIdx.findFirstMatchIn(n).map(_.group(1).toInt).getOrElse(-1) -> n)
+        files.filter(_._1 < 0).foreach { case (_, name) =>
           throw new IllegalStateException(
-            s"stage '$stage' wrote part file '$file' whose name has no parsable " +
+            s"stage '$stage' wrote part file '$name' whose name has no parsable " +
               "part-<index> segment; manifest lineage would be ambiguous")
         }
-        rawStats.groupBy(_._1).filter(_._2.length > 1).foreach { case (idx, fs) =>
+        files.groupBy(_._1).filter(_._2.length > 1).foreach { case (idx, dup) =>
           throw new IllegalStateException(
             s"stage '$stage' wrote multiple part files with index $idx: " +
-              fs.map(_._2).mkString(", ") + "; manifest lineage would be ambiguous")
+              dup.map(_._2).mkString(", ") + "; manifest lineage would be ambiguous")
         }
-        val stats = rawStats
-          .map { case (idx, _, n, x) => PartitionStat(idx, n, x) }
-          .toSeq.sortBy(_.partition)
+        val onDisk = files.map(_._1).toSet
+        stats.filterNot(p => onDisk(p.partition)).foreach { p =>
+          throw new IllegalStateException(
+            s"stage '$stage' wrote ${p.rows} rows in partition ${p.partition} " +
+              s"but no part file with that index is in $dir")
+        }
         val manifest = Manifest(
           stage, pipelineVersion, fp, params,
           stats.map(_.rows).sum, stats,
           (System.nanoTime() - t0) / 1e9, System.currentTimeMillis())
-        val tmp = Paths.get(root, stage, "manifest.json.tmp")
-        Files.createDirectories(tmp.getParent)
-        Files.write(tmp, toJson(manifest).getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, manifestPath(root, stage), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-        spark.read.parquet(dataPath(root, stage))
+        writeManifest(fs, root, stage, toJson(manifest))
+        spark.read.schema(out.schema).parquet(path)
     }
   }
 }

@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into the `private[sql]` Column <-> catalyst Expression
   * converters of Spark 4's classic API. Spark 4 wraps Column around
@@ -21,4 +24,10 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** A frame over rows a plan has already produced, with no plan of its
+    * own: writing it runs exactly the RDD's partitions, one task each.
+    */
+  def dataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.ErPipeline
@@ -226,6 +231,136 @@ class ResumeSpec extends SparkSpec {
       ErPipeline.run(spark, pages, cfg)
       val m2 = Files.readAllBytes(Paths.get(root, "normalize", "manifest.json"))
       assert(m1.toSeq === m2.toSeq, "skipped stage must not rewrite its manifest")
+    } finally rmrf(root)
+  }
+
+  test("write-time lineage stats equal the read-back stats of every stage") {
+    val root = tmpRoot()
+    try {
+      val fs = StageStore.fileSystem(spark, root)
+      def recorded(stage: String) = StageStore.readManifest(fs, root, stage).get.partitions
+      def readBack(stage: String) =
+        StageStore.fileStats(spark.read.parquet(s"$root/$stage/data.parquet"))
+          .map { case (idx, _, n, x) => StageStore.PartitionStat(idx, n, x) }.toSeq
+          .sortBy(_.partition)
+      def manifests(stages: Seq[String]) =
+        stages.map(s => Files.readAllBytes(Paths.get(root, s, "manifest.json")).toSeq)
+
+      val pages = WebPageGen.pages(spark, 40L).toDF
+      val cfg = ErPipeline.Config(outRoot = root)
+      ErPipeline.run(spark, pages, cfg)
+      val stages = Seq("normalize", "signatures", "candidates", "scores", "clusters")
+      stages.foreach { s =>
+        assert(recorded(s).nonEmpty, s)
+        assert(recorded(s) === readBack(s), s"stage $s")
+      }
+      val written = manifests(stages)
+      ErPipeline.run(spark, pages, cfg)
+      assert(manifests(stages) === written, "a re-run must resume every stage")
+
+      // a frame with empty partitions (ids < 300 fill 3 of 8 range
+      // partitions) and a zero-row stage: empty partitions record no stat
+      Seq("gaps" -> (spark.range(0, 1000, 1, 8).filter(col("id") < 300), 300L, Seq(0, 1, 2)),
+        "none" -> (spark.range(0, 100, 1, 4).filter(col("id") < 0), 0L, Nil)).foreach {
+        case (s, (df, rows, parts)) =>
+          var computed = 0
+          def make() = { computed += 1; df.toDF("id") }
+          assert(StageStore.runStage(spark, root, s, "v1", "fp")(make()).count() === rows)
+          assert(recorded(s).map(_.partition) === parts, s)
+          assert(recorded(s) === readBack(s), s"stage $s")
+          assert(StageStore.runStage(spark, root, s, "v1", "fp")(make()).count() === rows)
+          assert(computed === 1, s"stage $s must resume")
+      }
+    } finally rmrf(root)
+  }
+
+  test("committing a materialized frame runs one Spark job") {
+    val root = tmpRoot()
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val df = spark.range(0, 1000, 1, 4).toDF("id").withColumn("v", col("id") * 3)
+      .localCheckpoint()
+    sc.addSparkListener(listener)
+    try {
+      ListenerBusDrain(sc)
+      jobs.set(0)
+      StageStore.runStage(spark, root, "s7", "v1", "fp")(df)
+      ListenerBusDrain(sc)
+      assert(jobs.get === 1, "the write is the commit's only job; nothing is read back")
+    } finally {
+      sc.removeSparkListener(listener)
+      rmrf(root)
+    }
+  }
+
+  test("a file:-scheme root keeps its manifest under the root and resumes") {
+    val root = tmpRoot()
+    val stray = Paths.get("file:")
+    val strayBefore = Files.exists(stray)
+    try {
+      var computed = 0
+      def make() = { computed += 1; spark.range(100).toDF("id") }
+      StageStore.runStage(spark, s"file:$root", "s8", "v1", "fp")(make()).count()
+      assert(Files.exists(Paths.get(root, "s8", "manifest.json")),
+        "the manifest must be written under the root")
+      assert(StageStore.runStage(spark, s"file:$root", "s8", "v1", "fp")(make()).count() === 100)
+      assert(computed === 1, "a file: root must resume without recompute")
+      assert(strayBefore || !Files.exists(stray),
+        "no relative file: directory may appear in the working directory")
+    } finally {
+      rmrf(root)
+      if (!strayBefore) rmrf(stray.toString)
+    }
+  }
+
+  test("a stage recomputed from its own previous data is refused, old files intact") {
+    val root = tmpRoot()
+    try {
+      def parts() = {
+        val dir = Paths.get(root, "s9", "data.parquet")
+        val listing = Files.list(dir)
+        try listing.iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+          .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq).toMap
+        finally listing.close()
+      }
+      val a = StageStore.runStage(spark, root, "s9", "v1", "fp-A") {
+        spark.range(0, 1000, 1, 4).toDF("id")
+      }
+      val before = parts()
+      assert(before.nonEmpty)
+      val e = intercept[Exception] {
+        StageStore.runStage(spark, root, "s9", "v1", "fp-B")(a.filter(col("id") % 2 === 0))
+      }
+      assert(e.getMessage.toLowerCase.contains("overwrite"), e.getMessage)
+      assert(parts() === before)
+      assert(StageStore.runStage(spark, root, "s9", "v1", "fp-A")(fail("must resume"))
+        .count() === 1000)
+    } finally rmrf(root)
+  }
+
+  test("a kill between the data write and the manifest never resumes the new rows") {
+    val root = tmpRoot()
+    try {
+      // same row count in every partition: only the checksums tell A from B
+      def stageA = spark.range(0, 1000, 1, 4).toDF("id")
+      def stageB = spark.range(5000, 6000, 1, 4).toDF("id")
+      StageStore.runStage(spark, root, "s10", "v1", "fp-A")(stageA)
+      val mp = Paths.get(root, "s10", "manifest.json")
+      val manifestA = Files.readAllBytes(mp)
+      StageStore.runStage(spark, root, "s10", "v1", "fp-B")(stageB)
+      // the kill: B's data is in place, its manifest rename never happened
+      Files.write(mp, manifestA)
+      val ids =
+        try Some(StageStore.runStage(spark, root, "s10", "v1", "fp-A")(stageA)
+          .collect().map(_.getLong(0)).sorted.toSeq)
+        catch { case e: IllegalStateException if e.getMessage.contains("lineage") => None }
+      ids.foreach { got =>
+        assert(got.sameElements(0L until 1000L),
+          s"resumed ${got.size} rows starting at ${got.headOption} instead of A's 0 until 1000")
+      }
     } finally rmrf(root)
   }
 
