@@ -93,14 +93,25 @@ object ErPipeline {
   }
 
   // -------------------------------------------------------------------
-  // stage 2: normalize — reference par.1.6 semantics per field + validity
+  // stage 2: normalize — reference par.1.6 semantics per field
   // -------------------------------------------------------------------
 
+  /** Normalized contact fields, one row per page. Every column has a
+    * reader, so the stage table carries nothing unread:
+    *  - url, warc_ts: record identity; `staleRows` and `runIncremental`
+    *    compare warc_ts;
+    *  - lang: the soundex blocking key and scoring;
+    *  - name_norm, email_norm, phone_norm: blocking keys, the embedding
+    *    and scoring; name_norm_rev, state_norm, zip_norm: scoring;
+    *  - first_norm, last_norm: the soundex key in `signatures`, which
+    *    drops them.
+    * No code filters on validity, so no validity flag is emitted.
+    */
   def normalize(extracted: DataFrame): DataFrame = {
     val firstN = Seq(col("first_name"))
     val lastN = Seq(col("last_name"))
     extracted.select(
-      col("url"), col("warc_ts"), col("lang"), col("text"),
+      col("url"), col("warc_ts"), col("lang"),
       Normalize.normalizeField(firstN ++ lastN, 50).as("name_norm"),
       Normalize.normalizeField(lastN ++ firstN, 50).as("name_norm_rev"),
       Normalize.normalizeField(Seq(col("first_name")), 25).as("first_norm"),
@@ -108,11 +119,7 @@ object ErPipeline {
       Normalize.normalizeField(Seq(col("email")), 35).as("email_norm"),
       Normalize.normalizePhone(col("phone")).as("phone_norm"),
       Normalize.normalizeField(Seq(col("state")), 2).as("state_norm"),
-      Normalize.normalizeField(Seq(col("zip")), 5).as("zip_norm"),
-      Normalize.isValidRow(Seq(col("first_name"), col("last_name"), col("email"),
-        col("phone"), col("state"), col("zip"))).as("valid"),
-      Normalize.tokenize(Normalize.normalizeField(firstN ++ lastN, 50), 50).as("name_tokens"),
-      Normalize.nonPadLength(Normalize.normalizeField(firstN ++ lastN, 50)).as("name_len"))
+      Normalize.normalizeField(Seq(col("zip")), 5).as("zip_norm"))
   }
 
   // -------------------------------------------------------------------
@@ -123,6 +130,15 @@ object ErPipeline {
   private def nameSorted: Column =
     array_join(array_sort(split(col("name_norm"), " ")), " ")
 
+  /** Blocking keys and the embedding over `normalized`, whose soundex
+    * inputs first_norm and last_norm are then dropped. The result (and the
+    * `signatures` stage table) is url, warc_ts, lang, name_norm,
+    * name_norm_rev, email_norm, phone_norm, state_norm, zip_norm, each
+    * read as listed at `normalize`, then:
+    *  - embedding: scoring's cosine, and the LSH keys here;
+    *  - block_keys: candidate generation and `runIncremental`'s touched
+    *    blocks.
+    */
   def signatures(normalized: DataFrame, cfg: Config = Config()): DataFrame = {
     val embedInput = concat_ws("|", nameSorted, col("email_norm"), col("phone_norm"))
     val emb = Similarity.ngramEmbed(embedInput, cfg.embedDim)
@@ -150,6 +166,7 @@ object ErPipeline {
     normalized
       .withColumn("embedding", emb)
       .withColumn("block_keys", filter(allKeys, k => k.isNotNull))
+      .drop("first_norm", "last_norm")
   }
 
   // -------------------------------------------------------------------
@@ -640,7 +657,8 @@ object ErPipeline {
     val nStale = stale.count()
 
     val staleSigs = signatures(normalize(extract(stale)), cfg)
-    val mergedSigs = priorSignatures
+    // by name: priors from an older stage table may carry more columns
+    val mergedSigs = priorSignatures.select(staleSigs.columns.map(col): _*)
       .join(stale.select("url"), Seq("url"), "left_anti")
       .unionByName(staleSigs)
       .localCheckpoint()

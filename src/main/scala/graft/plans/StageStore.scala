@@ -2,15 +2,20 @@ package graft.plans
 
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.{Success, Try}
 
 import com.fasterxml.jackson.core.JsonProcessingException
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, XxHash64}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Checkpointed stage tables with per-partition lineage + metrics —
   * the resume layer the north rule requires. The reference's analogue is
@@ -27,8 +32,12 @@ import org.apache.spark.sql.functions._
   * part file's (rows, checksum) while writing it, the stage's data
   * directory is then listed, and the manifest is written to a temp file
   * and renamed into place last, all on the root's Hadoop `FileSystem`.
-  * The stage is not read back to compute its stats; the read side
-  * recomputes them from the files before it resumes.
+  * The stage is not read back to compute its stats.
+  *
+  * A resume is one job. As in Iceberg, the schema lives in the table
+  * metadata: the manifest records the committed frame's schema, so the
+  * parquet is opened without a schema-inference job, and the lineage
+  * check recomputes every file's stats in one single-stage pass.
   *
   * This sandbox has no Iceberg runtime (SURVEY.md par.7.4); the manifest
   * emulates the snapshot metadata an Iceberg table would carry, behind
@@ -52,11 +61,17 @@ object StageStore {
         * read-partition id and verify through the keying-independent
         * global aggregate instead — no spurious corruption refusal.
         */
-      fileKeyedStats: Boolean = true)
+      fileKeyedStats: Boolean = true,
+      /** The committed frame's schema; None in manifests written before
+        * the schema was recorded, which resume through schema inference.
+        */
+      schema: Option[StructType] = None)
 
   private val Json = new ObjectMapper()
 
-  /** Compact, fixed field order; `stat_keying` only on file-keyed stats. */
+  /** Compact, fixed field order; `stat_keying` only on file-keyed stats,
+    * `schema` (the `StructType` JSON, as an object) only when known.
+    */
   def toJson(m: Manifest): String = {
     val o = Json.createObjectNode()
       .put("stage", m.stage)
@@ -72,6 +87,7 @@ object StageStore {
         .put("checksum", p.checksum)
     }
     o.put("wall_clock_sec", m.wallClockSec).put("written_at_ms", m.writtenAtMs)
+    m.schema.foreach(t => o.set[JsonNode]("schema", Json.readTree(t.json)))
     Json.writeValueAsString(o)
   }
 
@@ -105,8 +121,10 @@ object StageStore {
       case fs => fs
     }
 
-  /** None when the stage has no manifest, or one that is not a manifest
-    * (the stage is then recomputed and the manifest rewritten).
+  /** None when the stage has no manifest, or one that is not a manifest:
+    * unparsable (e.g. truncated) JSON, a missing identity field, or a
+    * `schema` that is not a `StructType` (the stage is then recomputed and
+    * the manifest rewritten).
     */
   private[graft] def readManifest(fs: FileSystem, root: String, stage: String): Option[Manifest] = {
     val p = manifestPath(root, stage)
@@ -118,6 +136,13 @@ object StageStore {
       catch { case _: JsonProcessingException => return None }
     def text(name: String): Option[String] =
       Option(j.get(name)).filter(_.isTextual).map(_.asText)
+    val schema = j.get("schema") match {
+      case null => None
+      case t => Try(DataType.fromJson(t.toString)) match {
+        case Success(s: StructType) => Some(s)
+        case _ => return None
+      }
+    }
     for {
       st <- text("stage")
       v <- text("pipeline_version")
@@ -129,7 +154,8 @@ object StageStore {
         e.path("partition").asInt, e.path("rows").asLong, e.path("checksum").asLong)).toSeq,
       j.path("wall_clock_sec").asDouble,
       j.path("written_at_ms").asLong,
-      fileKeyedStats = j.path("stat_keying").asText == "file")
+      fileKeyedStats = j.path("stat_keying").asText == "file",
+      schema = schema)
   }
 
   /** Temp file, then rename: a reader sees the old manifest or the new
@@ -148,24 +174,53 @@ object StageStore {
 
   private val PartIdx = "part-(\\d+)".r
 
-  /** Per-file (row count, xor of row hashes) aggregate over a stage's
-    * parquet, keyed by the part index in the FILE NAME segment (the
-    * directory path may itself contain "part-<digits>") — one pass, same
-    * cost as the global aggregate, but localizable. Grouping by
-    * input_file_name (not spark_partition_id) keeps the key stable even
-    * when a large part file splits into several read partitions.
+  /** Per-file (row count, xor of row hashes) over a stage's parquet,
+    * keyed by the part index in the FILE NAME segment (the directory path
+    * may itself contain "part-<digits>"). One single-stage job: each task
+    * folds each run of rows from one file into a (rows, xor) triple, and
+    * the driver merges the triples by file. Keying by input_file_name
+    * (not spark_partition_id) keeps the key stable even when a large part
+    * file splits into several read partitions; count and xor are
+    * associative, so the pieces merge back to the file's stats.
     */
-  private[graft] def fileStats(df: DataFrame): Array[(Int, String, Long, Long)] =
-    df.groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(df.columns.map(col): _*)), lit(0L)).as("x"))
-      .collect()
-      .map { r =>
-        val file = r.getString(0)
-        val name = file.substring(file.lastIndexOf('/') + 1)
-        val idx = PartIdx.findFirstMatchIn(name).map(_.group(1).toInt).getOrElse(-1)
-        (idx, file, r.getLong(1), r.getLong(2))
-      }
+  private[graft] def fileStats(df: DataFrame): Array[(Int, String, Long, Long)] = {
+    val hashed = df.select(input_file_name(), xxhash64(df.columns.map(col): _*))
+    val runs = underExecution(hashed, "lineage check") {
+      hashed.queryExecution.toRdd.mapPartitions { it =>
+        val out = mutable.ArrayBuffer.empty[(String, Long, Long)]
+        var file: UTF8String = null
+        var n = 0L
+        var x = 0L
+        it.foreach { r =>
+          val f = r.getUTF8String(0)
+          if (f != file) {
+            if (file != null) out += ((file.toString, n, x))
+            file = f.clone()
+            n = 0L
+            x = 0L
+          }
+          n += 1
+          x ^= r.getLong(1)
+        }
+        if (file != null) out += ((file.toString, n, x))
+        out.iterator
+      }.collect()
+    }
+    runs.groupMapReduce(_._1)(r => (r._2, r._3)) { case ((n1, x1), (n2, x2)) =>
+      (n1 + n2, x1 ^ x2)
+    }.toArray.map { case (file, (n, x)) =>
+      val name = file.substring(file.lastIndexOf('/') + 1)
+      val idx = PartIdx.findFirstMatchIn(name).map(_.group(1).toInt).getOrElse(-1)
+      (idx, file, n, x)
+    }
+  }
+
+  /** Runs `body`, which materializes `df`'s plan through its RDD, as one
+    * SQL execution of that plan, so every job it starts (AQE's shuffle
+    * stages included) carries an execution id for SQL listeners.
+    */
+  private def underExecution[T](df: DataFrame, name: String)(body: => T): T =
+    SQLExecution.withNewExecutionId(df.queryExecution, Some(name))(body)
 
   /** Read-side lineage check (north rule: per-partition lineage must be
     * USED, not just recorded): before a stage is resumed from its parquet,
@@ -174,7 +229,8 @@ object StageStore {
     * corrupted, truncated, or partially-deleted stage refuses to resume
     * instead of silently feeding bad rows downstream, and the refusal
     * NAMES the offending file(s) so the operator can act on it. One
-    * column-complete pass over the stage data; no recompute of the stage.
+    * column-complete, single-stage pass over the stage data; no
+    * recompute of the stage.
     */
   private def verifyLineage(df: DataFrame, m: Manifest, root: String, stage: String): Unit = {
     // legacy manifest without stats; a file-keyed one without stats is a
@@ -186,20 +242,19 @@ object StageStore {
       // checksums and the total row count are keying-independent — verify
       // globally instead of refusing intact data as corrupted
       val expectXor = m.partitions.map(_.checksum).foldLeft(0L)(_ ^ _)
-      val r = df
-        .agg(count(lit(1)).as("n"),
-          coalesce(bit_xor(xxhash64(df.columns.map(col): _*)), lit(0L)).as("x"))
-        .head()
-      if (r.getLong(0) != m.rows || r.getLong(1) != expectXor)
+      val (n, x) = fileStats(df).foldLeft((0L, 0L)) { case ((n, x), (_, _, fn, fx)) =>
+        (n + fn, x ^ fx)
+      }
+      if (n != m.rows || x != expectXor)
         throw new IllegalStateException(
           s"stage '$stage' parquet at $root/$stage does not match its manifest lineage " +
-            s"(rows ${r.getLong(0)} vs ${m.rows}, checksum ${r.getLong(1)} vs $expectXor) " +
+            s"(rows $n vs ${m.rows}, checksum $x vs $expectXor) " +
             "— the stage data is corrupted or truncated; clear the stage directory to rebuild")
       return
     }
     val perFile = fileStats(df)
     val expect = m.partitions.map(p => p.partition -> p).toMap
-    val problems = scala.collection.mutable.ArrayBuffer.empty[String]
+    val problems = mutable.ArrayBuffer.empty[String]
     perFile.foreach { case (idx, file, n, x) =>
       expect.get(idx) match {
         case None =>
@@ -232,7 +287,9 @@ object StageStore {
     * tasks as they consume their rows. A write task's partition index is
     * its `part-NNNNN` file index. The checksum is the xor of
     * `xxhash64(all columns)`, the value `fileStats` recomputes on read.
-    * Stats are keyed by partition, so a retried task counts once.
+    * Stats are keyed by partition, so a retried task counts once. The
+    * write runs inside one SQL execution of `out`'s plan, so the jobs that
+    * materialize its shuffle stages carry an execution id like the write's.
     */
   private def writeWithStats(
       spark: SparkSession, out: DataFrame, path: String): Seq[PartitionStat] = {
@@ -240,7 +297,9 @@ object StageStore {
       BoundReference(i, f.dataType, nullable = true)
     })
     val acc = spark.sparkContext.collectionAccumulator[PartitionStat]
-    val rows = out.queryExecution.toRdd.mapPartitionsWithIndex { (idx, it) =>
+    // lazy: toRdd plans `out` and, under AQE, runs its shuffle stages, so
+    // it is first forced inside the commit's SQL execution
+    lazy val rows = out.queryExecution.toRdd.mapPartitionsWithIndex { (idx, it) =>
       val h = UnsafeProjection.create(Seq(hash))
       var n = 0L
       var x = 0L
@@ -262,7 +321,9 @@ object StageStore {
         }
       }
     }
-    GraftBridge.dataFrame(spark, rows, out.schema).write.mode("overwrite").parquet(path)
+    underExecution(out, "stage commit") {
+      GraftBridge.dataFrame(spark, rows, out.schema).write.mode("overwrite").parquet(path)
+    }
     acc.value.asScala.map(p => p.partition -> p).toMap.values.toSeq.sortBy(_.partition)
   }
 
@@ -270,8 +331,11 @@ object StageStore {
     * manifest does not match (version, inputs, params). A computed stage
     * is committed by its write job alone: its per-part-file lineage stats
     * are taken while it is written, its data directory is listed on the
-    * root's `FileSystem`, and the manifest is renamed into place last. The
-    * returned frame reads the written parquet with the computed schema.
+    * root's `FileSystem`, and the manifest, which records the computed
+    * schema, is renamed into place last. The returned frame reads the
+    * written parquet with that schema. A resumed stage reads the parquet
+    * with the manifest's schema (a manifest without one infers it) and is
+    * returned once its lineage check, one job, passes.
     */
   def runStage(
       spark: SparkSession,
@@ -285,7 +349,7 @@ object StageStore {
     val path = dataPath(root, stage)
     readManifest(fs, root, stage) match {
       case Some(m) if m.pipelineVersion == pipelineVersion && m.inputsFingerprint == fp =>
-        val df = spark.read.parquet(path)
+        val df = m.schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
         verifyLineage(df, m, root, stage)
         df
       case Some(m) if m.pipelineVersion != pipelineVersion =>
@@ -338,7 +402,7 @@ object StageStore {
         val manifest = Manifest(
           stage, pipelineVersion, fp, params,
           stats.map(_.rows).sum, stats,
-          (System.nanoTime() - t0) / 1e9, System.currentTimeMillis())
+          (System.nanoTime() - t0) / 1e9, System.currentTimeMillis(), schema = Some(out.schema))
         writeManifest(fs, root, stage, toJson(manifest))
         spark.read.schema(out.schema).parquet(path)
     }

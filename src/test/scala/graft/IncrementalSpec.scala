@@ -178,6 +178,27 @@ class IncrementalSpec extends SparkSpec {
     assert(scopedKeyed > 0L)
   }
 
+  test("priors with columns the signatures no longer carry give the same clusters") {
+    val cfg = ErPipeline.Config()
+    val pages0 = WebPageGen.pages(spark, 40L, Seed).toDF.localCheckpoint()
+    val full0 = ErPipeline.run(spark, pages0, cfg)
+    val sigs0 = full0.signatures.localCheckpoint()
+    val scored0 = full0.scored.localCheckpoint()
+    // the signatures table of older stage roots, extra columns in place
+    val wide = sigs0.select(col("url"), col("warc_ts"), col("lang"), lit("page text").as("text"),
+      col("name_norm"), col("name_norm_rev"), lit("").as("first_norm"), lit("").as("last_norm"),
+      col("email_norm"), col("phone_norm"), col("state_norm"), col("zip_norm"),
+      lit(true).as("valid"), array(lit(1), lit(2)).as("name_tokens"), lit(2).as("name_len"),
+      col("embedding"), col("block_keys"))
+    val pages1 = snapshot(pages0, (0L until 40L).filter(_ % 7 == 0).map(later(_, "base")))
+    def clusters(priorSigs: DataFrame): String = {
+      val (inc, stats) = ErPipeline.runIncremental(spark, pages1, priorSigs, scored0, cfg)
+      assert(stats.staleRowCount === 6L)
+      graft.plans.StageStore.fingerprint(inc.clusters)
+    }
+    assert(clusters(wide) === clusters(sigs0))
+  }
+
   test("batchLimit caps an incremental run at the oldest stale rows") {
     val cfg = ErPipeline.Config()
     val pages0 = WebPageGen.pages(spark, 40L).toDF.cache()

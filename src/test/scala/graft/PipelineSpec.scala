@@ -313,4 +313,16 @@ class PipelineSpec extends SparkSpec {
     assert(stale.count() === expected)
     assert(stale.count() < input.count(), "incremental run must skip unchanged rows")
   }
+
+  test("the signatures stage table holds exactly the columns later stages read") {
+    val root = java.nio.file.Files.createTempDirectory("graft-stages").toFile
+    try {
+      val res = ErPipeline.run(spark, WebPageGen.pages(spark, 20L).toDF,
+        cfg.copy(outRoot = root.toString))
+      val expected = Seq("url", "warc_ts", "lang", "name_norm", "name_norm_rev",
+        "email_norm", "phone_norm", "state_norm", "zip_norm", "embedding", "block_keys")
+      assert(spark.read.parquet(s"$root/signatures/data.parquet").columns.toSeq === expected)
+      assert(res.signatures.columns.toSeq === expected)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
 }

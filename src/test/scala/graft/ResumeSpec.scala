@@ -2,12 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.ErPipeline
@@ -23,6 +26,31 @@ class ResumeSpec extends SparkSpec {
   private def tmpRoot(): String = {
     val p = Files.createTempDirectory("graft-stages")
     p.toString
+  }
+
+  /** The properties of every job `body` starts, in start order. */
+  private def jobsOf(body: => Unit): Seq[java.util.Properties] = {
+    val sc = spark.sparkContext
+    val props = new ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = props.add(e.properties)
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    props.asScala.toSeq
+  }
+
+  /** Rewrites a stage's manifest JSON in place. */
+  private def editManifest(root: String, stage: String)(edit: ObjectNode => Unit): Unit = {
+    val mapper = new ObjectMapper()
+    val mp = Paths.get(root, stage, "manifest.json")
+    val o = mapper.readTree(Files.readAllBytes(mp)).asInstanceOf[ObjectNode]
+    edit(o)
+    Files.write(mp, mapper.writeValueAsBytes(o))
   }
 
   private def rmrf(root: String): Unit = {
@@ -276,24 +304,103 @@ class ResumeSpec extends SparkSpec {
 
   test("committing a materialized frame runs one Spark job") {
     val root = tmpRoot()
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     val df = spark.range(0, 1000, 1, 4).toDF("id").withColumn("v", col("id") * 3)
       .localCheckpoint()
-    sc.addSparkListener(listener)
     try {
-      ListenerBusDrain(sc)
-      jobs.set(0)
-      StageStore.runStage(spark, root, "s7", "v1", "fp")(df)
-      ListenerBusDrain(sc)
-      assert(jobs.get === 1, "the write is the commit's only job; nothing is read back")
-    } finally {
-      sc.removeSparkListener(listener)
-      rmrf(root)
-    }
+      val jobs = jobsOf(StageStore.runStage(spark, root, "s7", "v1", "fp")(df))
+      assert(jobs.size === 1, "the write is the commit's only job; nothing is read back")
+    } finally rmrf(root)
+  }
+
+  test("resuming a committed stage runs one Spark job") {
+    val root = tmpRoot()
+    try {
+      def make(): DataFrame = spark.range(0, 1000, 1, 4).toDF("id").withColumn("v", col("id") * 3)
+      StageStore.runStage(spark, root, "s11", "v1", "fp")(make())
+      var resumed: DataFrame = null
+      val jobs = jobsOf {
+        resumed = StageStore.runStage(spark, root, "s11", "v1", "fp")(fail("must resume"))
+      }
+      assert(jobs.size === 1,
+        "the lineage check is the resume's only job; the schema comes from the manifest")
+      assert(resumed.count() === 1000)
+      assert(resumed.schema.map(f => f.name -> f.dataType) ===
+        make().schema.map(f => f.name -> f.dataType))
+    } finally rmrf(root)
+  }
+
+  test("every job of a computed stage carries a SQL execution id") {
+    val root = tmpRoot()
+    try {
+      // a shuffle: under AQE its map stage runs as a job of its own
+      val jobs = jobsOf {
+        StageStore.runStage(spark, root, "s12", "v1", "fp") {
+          spark.range(0, 1000, 1, 4).toDF("id")
+            .groupBy((col("id") % 10).as("k")).agg(count(lit(1)).as("n"))
+        }
+      }
+      assert(jobs.size >= 2, s"expected a shuffle-stage job and the write job, got ${jobs.size}")
+      val missing = jobs.count(p => p.getProperty("spark.sql.execution.id") == null)
+      assert(missing === 0, s"$missing of ${jobs.size} jobs ran outside a SQL execution")
+    } finally rmrf(root)
+  }
+
+  test("a manifest without a schema resumes through inference and passes lineage") {
+    val root = tmpRoot()
+    try {
+      var computed = 0
+      def make(): DataFrame = {
+        computed += 1
+        spark.range(0, 1000, 1, 4).toDF("id").withColumn("s", col("id").cast("string"))
+      }
+      StageStore.runStage(spark, root, "s13", "v1", "fp")(make())
+      val fs = StageStore.fileSystem(spark, root)
+      assert(StageStore.readManifest(fs, root, "s13").get.schema.isDefined)
+      // the manifest format written before the schema was recorded
+      editManifest(root, "s13")(_.remove("schema"))
+      assert(StageStore.readManifest(fs, root, "s13").get.schema.isEmpty)
+      val df = StageStore.runStage(spark, root, "s13", "v1", "fp")(make())
+      assert(computed === 1, "a manifest without a schema must still resume")
+      assert(df.count() === 1000 && df.columns.toSeq === Seq("id", "s"))
+      // and its lineage is still checked
+      val part = Files.list(Paths.get(root, "s13", "data.parquet"))
+        .filter(p => p.getFileName.toString.startsWith("part-"))
+        .findFirst().get()
+      Files.delete(part)
+      val e = intercept[IllegalStateException] {
+        StageStore.runStage(spark, root, "s13", "v1", "fp")(make())
+      }
+      assert(e.getMessage.contains("lineage"))
+    } finally rmrf(root)
+  }
+
+  test("a truncated manifest or one with an unparsable schema reads as absent") {
+    val root = tmpRoot()
+    try {
+      var computed = 0
+      def make(): DataFrame = { computed += 1; spark.range(0, 100, 1, 2).toDF("id") }
+      val fs = StageStore.fileSystem(spark, root)
+      val mp = Paths.get(root, "s14", "manifest.json")
+      StageStore.runStage(spark, root, "s14", "v1", "fp")(make())
+      val intact = Files.readAllBytes(mp)
+
+      Files.write(mp, intact.take(intact.length / 2))
+      assert(StageStore.readManifest(fs, root, "s14").isEmpty)
+      assert(StageStore.runStage(spark, root, "s14", "v1", "fp")(make()).count() === 100)
+      assert(computed === 2, "a truncated manifest must recompute the stage")
+      assert(StageStore.readManifest(fs, root, "s14").isDefined, "the manifest is rewritten")
+
+      Seq[ObjectNode => Unit](
+        _.put("schema", "not a schema"),
+        _.put("schema", "integer"),
+        _.putObject("schema").put("type", "no-such-type")).zipWithIndex.foreach {
+        case (edit, i) =>
+          editManifest(root, "s14")(edit)
+          assert(StageStore.readManifest(fs, root, "s14").isEmpty, s"edit $i")
+          assert(StageStore.runStage(spark, root, "s14", "v1", "fp")(make()).count() === 100)
+          assert(computed === 3 + i, s"edit $i: an unparsable schema must recompute the stage")
+      }
+    } finally rmrf(root)
   }
 
   test("a file:-scheme root keeps its manifest under the root and resumes") {
