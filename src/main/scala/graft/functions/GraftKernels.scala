@@ -423,7 +423,7 @@ object GraftKernels {
 
   /** Sorted DISTINCT 64-bit hashes of the word w-shingles of an
     * already-canonical (lowercased, single-spaced) string — the one-pass
-    * kernel behind Dedup.shingleHashes. Semantics mirror the Catalyst
+    * kernel behind Similarity.shingleHashes. Semantics mirror the Catalyst
     * composition it replaces: fewer than w words (including the empty
     * string) yield exactly one shingle over all words, so set cardinality
     * — the only thing Jaccard sees — is identical; hash values only need

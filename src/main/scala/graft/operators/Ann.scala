@@ -31,35 +31,46 @@ object Ann {
       // explicit width: spread single-split corpora; per-row cost here is
       // |queries| cosines, so an AQE-coalesced exchange would serialize it
       .repartition(graft.core.Par.spread(corpus.sparkSession), col("neighbor_id"))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", Similarity.cosineSim(asDouble(col("qe")), asDouble(col("ce"))))
+    topK(c.join(q, col("query_id") =!= col("neighbor_id"))
+      .withColumn("sim", Similarity.cosineSim(asDouble(col("qe")), asDouble(col("ce")))), k)
+  }
+
+  /** The one top-k rule of every ANN path: per query, `sim` descending
+    * with `neighbor_id` as tie-break, keep `rk <= k`.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
     scored.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select("query_id", "neighbor_id", "rk")
   }
 
-  /** LSH-bucketed approximate top-k: candidates = bucket collisions in any
-    * of `tables` random-hyperplane tables, re-ranked exactly.
-    */
   /** Exploded (id, bucket) random-hyperplane keys — the persistable LSH
-    * index artifact (one row per table per vector).
+    * index artifact (one row per table per vector). Table t hashes with
+    * hyperplanes seeded `seed + t`, so two callers share buckets exactly
+    * when they share the seed.
     */
   private[operators] def rhpBuckets(
       df: DataFrame, id: String, as: String, embCol: String,
-      bits: Int, tables: Int): DataFrame =
+      bits: Int, tables: Int, seed: Long): DataFrame =
     df.select(col(id).as(as),
       explode(array((0 until tables).map(t =>
         concat(lit(s"$t:"),
-          Similarity.rhpKey(col(embCol), bits, 0xA11CE000L + t).cast("string"))): _*))
+          Similarity.rhpKey(col(embCol), bits, seed + t).cast("string"))): _*))
         .as("bucket"))
 
+  /** Hyperplane seed of the ANN bucket tables (query and corpus side). */
+  private[operators] val LshSeed = 0xA11CE000L
+
+  /** LSH-bucketed approximate top-k: candidates = bucket collisions in any
+    * of `tables` random-hyperplane tables, re-ranked exactly.
+    */
   def lshTopK(
       queries: DataFrame, corpus: DataFrame,
       qId: String, cId: String, embCol: String, k: Int,
       bits: Int = 8, tables: Int = 4): DataFrame =
     lshTopKWithBuckets(queries,
-      rhpBuckets(corpus, cId, "neighbor_id", embCol, bits, tables),
+      rhpBuckets(corpus, cId, "neighbor_id", embCol, bits, tables, LshSeed),
       corpus, qId, cId, embCol, k, bits, tables)
 
   /** lshTopK over PREBUILT corpus buckets (see AnnIndex: built once per
@@ -70,7 +81,7 @@ object Ann {
       queries: DataFrame, corpusBuckets: DataFrame, corpus: DataFrame,
       qId: String, cId: String, embCol: String, k: Int,
       bits: Int, tables: Int): DataFrame = {
-    val q = rhpBuckets(queries, qId, "query_id", embCol, bits, tables)
+    val q = rhpBuckets(queries, qId, "query_id", embCol, bits, tables, LshSeed)
     val c = corpusBuckets
     // the bucket join and the collision dedup carry IDS ONLY — both
     // embedding payloads join back once per deduped pair, not once per
@@ -82,13 +93,9 @@ object Ann {
       .distinct()
     val qe = queries.select(col(qId).as("query_id"), col(embCol).as("qe"))
     val ce = corpus.select(col(cId).as("neighbor_id"), col(embCol).as("ce"))
-    val cands = ids.join(qe, "query_id").join(ce, "neighbor_id")
+    topK(ids.join(qe, "query_id").join(ce, "neighbor_id")
       .withColumn("sim", Similarity.cosineSim(
-        asDouble(col("qe")), asDouble(col("ce"))))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    cands.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("query_id", "neighbor_id", "rk")
+        asDouble(col("qe")), asDouble(col("ce")))), k)
   }
 
   /** IVF (inverted-file) approximate top-k: a coarse k-means quantizer
@@ -164,13 +171,9 @@ object Ann {
       .withColumn("probe", slice(reverse(array_sort(cellSims(centroids)(col("qe")))), 1, nProbe))
       .select(col("query_id"), col("qe"), explode(col("probe")).as("p"))
       .select(col("query_id"), col("qe"), col("p.cell").as("cell"))
-    val cands = queryCells.join(corpusCells, Seq("cell"))
+    topK(queryCells.join(corpusCells, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", Similarity.cosineSim(col("qe"), col("ce")))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    cands.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("query_id", "neighbor_id", "rk")
+      .withColumn("sim", Similarity.cosineSim(col("qe"), col("ce"))), k)
   }
 
   /** Deterministic driver-side Lloyd iterations: centroids initialized
@@ -239,13 +242,25 @@ object Ann {
   def dequantize(qs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     transform(qs.getField("q"), x => x.cast("double") * qs.getField("scale"))
 
+  /** Key of every top-k output: one row per (query, neighbor). */
+  val TopKKeys: Seq[String] = Seq("query_id", "neighbor_id")
+
+  /** The one recall rule of the approximate operators: the share of
+    * `exact` rows (matched on `keys`) that `approx` also returns, as
+    * (recall, n) with n the exact row count. `approx` must hold each key
+    * at most once — every top-k and pair output here is distinct on it.
+    */
+  def recall(exact: DataFrame, approx: DataFrame, keys: Seq[String]): DataFrame =
+    exact.join(approx.select((keys.map(col) :+ lit(1).as("hit")): _*), keys, "left")
+      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))).as("recall"),
+        count(lit(1)).as("n"))
+
   /** Recall of brute-force top-k over int8-quantized vectors vs the
     * float-exact baseline (self-check metric for the storage lever).
     */
   def quantizedRecall(
       queries: DataFrame, corpus: DataFrame,
       qId: String, cId: String, embCol: String, k: Int): DataFrame = {
-    val exact = bruteForceTopK(queries, corpus, qId, cId, embCol, k)
     // bind the quantize struct to a named column BEFORE dequantize's
     // transform touches it: a lambda re-evaluates outer expressions per
     // element, so inlining quantize() would recompute the array_max scale
@@ -255,36 +270,7 @@ object Ann {
       df.withColumn("_qs", quantize(col(embCol)))
         .withColumn(embCol, dequantize(col("_qs")))
         .drop("_qs")
-    val approx = bruteForceTopK(deq(queries), deq(corpus), qId, cId, embCol, k)
-    exact.join(approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
-      Seq("query_id", "neighbor_id"), "left")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))).as("recall"),
-        count(lit(1)).as("n"))
-  }
-
-  /** Recall of the IVF path vs the exact baseline (self-check metric). */
-  def ivfRecall(
-      queries: DataFrame, corpus: DataFrame,
-      qId: String, cId: String, embCol: String, k: Int,
-      cells: Int = 16, nProbe: Int = 4): DataFrame = {
-    val exact = bruteForceTopK(queries, corpus, qId, cId, embCol, k)
-    val approx = ivfTopK(queries, corpus, qId, cId, embCol, k, cells, nProbe)
-    exact.join(approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
-      Seq("query_id", "neighbor_id"), "left")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))).as("recall"),
-        count(lit(1)).as("n"))
-  }
-
-  /** Recall of the LSH path vs the exact baseline (self-check metric). */
-  def lshRecall(
-      queries: DataFrame, corpus: DataFrame,
-      qId: String, cId: String, embCol: String, k: Int,
-      bits: Int = 8, tables: Int = 4): DataFrame = {
-    val exact = bruteForceTopK(queries, corpus, qId, cId, embCol, k)
-    val approx = lshTopK(queries, corpus, qId, cId, embCol, k, bits, tables)
-    exact.join(approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
-      Seq("query_id", "neighbor_id"), "left")
-      .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))).as("recall"),
-        count(lit(1)).as("n"))
+    recall(bruteForceTopK(queries, corpus, qId, cId, embCol, k),
+      bruteForceTopK(deq(queries), deq(corpus), qId, cId, embCol, k), TopKKeys)
   }
 }

@@ -94,7 +94,7 @@ object AnnIndex {
         spark, root, "lsh_buckets", Version,
         corpusFingerprint(corpus, cId, embCol),
         Map("bits" -> bits.toString, "tables" -> tables.toString)) {
-        Ann.rhpBuckets(corpus, cId, "neighbor_id", embCol, bits, tables)
+        Ann.rhpBuckets(corpus, cId, "neighbor_id", embCol, bits, tables, Ann.LshSeed)
       }, bits, tables)
 
   /** LSH top-k over a persisted bucket index (queries keyed on the fly —

@@ -21,6 +21,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object Clustering {
 
+  /** Round cap of the star loop (O(log^2 n) rounds converge far below it). */
+  private val MaxIter = 50
+
+  /** Edges per shuffle partition of the star loop on large graphs. */
+  private val RowsPerPartition = 2000000L
+
   /** edges: two columns (src, dst) of any orderable type. Returns
     * (node, cluster_id) where cluster_id = min node id in the component.
     * Isolated nodes (absent from edges) are the caller's concern — see
@@ -30,8 +36,6 @@ object Clustering {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst",
-      maxIter: Int = 50,
-      rowsPerPartition: Long = 2000000L,
       // 1M edges ~ 16 MB of id pairs, ~200 MB of union-find state worst
       // case — comfortably single-task on any executor, while the star
       // loop below costs a dict-encode sort plus ~5 shuffles per round
@@ -108,8 +112,8 @@ object Clustering {
     // observe it — the checkpointed edge RDD rebases across sessions for
     // free.
     val sessionShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val p = math.max(1L, math.min(prevSig._1 / rowsPerPartition + 1, 20000L))
-    val width = if (prevSig._1 < rowsPerPartition)
+    val p = math.max(1L, math.min(prevSig._1 / RowsPerPartition + 1, 20000L))
+    val width = if (prevSig._1 < RowsPerPartition)
       math.min(sessionShuffle.toLong, math.max(1L, prevSig._1 / 50000L + 1L))
     else math.max(p, spark.sparkContext.defaultParallelism.toLong)
     val loopSession = spark.newSession()
@@ -117,7 +121,7 @@ object Clustering {
     e = loopSession.createDataFrame(e.rdd, e.schema)
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       // --- large-star: for each node x, attach every strictly-larger
       // neighbor to m(x) = min(N(x) u {x}).
       val nbrs = e.select($"u".as("x"), $"v".as("y"))

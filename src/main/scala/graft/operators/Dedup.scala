@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Par
-import graft.functions.{Normalize, Similarity}
+import graft.functions.{Normalize, Similarity, TextAnalysis}
 
 /** Training-data-pipeline deduplication operators: exact, word-shingle
   * Jaccard, MinHash+LSH, SimHash, embedding near-dup. Each is a
@@ -13,11 +13,6 @@ import graft.functions.{Normalize, Similarity}
   * at 100 TB the cost is O(candidates), never O(n^2).
   */
 object Dedup {
-
-  /** Canonicalized content fingerprint for exact dedup (md5 over
-    * lowercased, whitespace-collapsed text).
-    */
-  def fingerprint(text: Column): Column = md5(Normalize.canonicalText(text))
 
   /** Signature tables are read 3x per query (banding + both verify sides),
     * so they are materialized ONCE per call via an eager localCheckpoint
@@ -34,7 +29,7 @@ object Dedup {
     * the surviving (minimum) id.
     */
   def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), fingerprint(col(textCol)).as("fingerprint"))
+    df.select(col(idCol), TextAnalysis.docFingerprint(col(textCol)).as("fingerprint"))
       .groupBy("fingerprint")
       .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_dups"))
 
@@ -46,17 +41,6 @@ object Dedup {
       concat_ws(" ", (0 until n).map(o => element_at(w, i + o)): _*))
     array_distinct(when(size(w) >= n, grams).otherwise(array(array_join(w, " "))))
   }
-
-  /** Sorted distinct 64-bit hashes of the word n-gram shingles:
-    * set-isomorphic to the string shingles (collision odds ~n^2/2^64), 8
-    * bytes per element instead of ~20-char strings — intersections and
-    * shuffles get cheap while Jaccard VALUES stay identical (oracle-safe).
-    * Single-pass codegen kernel; the Catalyst composition it replaced
-    * (string array -> transform(xxhash64) -> distinct -> sort) cost
-    * ~3.3ms/doc from string materialization alone.
-    */
-  def shingleHashes(text: Column, n: Int): Column =
-    Similarity.shingleHashes(text, n)
 
   /** Jaccard via merge-scan overlap of two SORTED hashed shingle sets —
     * identical values to set Jaccard, O(n+m) per pair, no hash set.
@@ -88,7 +72,7 @@ object Dedup {
     // one task after a broadcast self-join; spread by block key first (on
     // real multi-split tables this exchange matches the data layout)
     val base = df.select((blockCols.map(col) :+ col(idCol) :+
-      shingleHashes(Normalize.canonicalText(col(textCol)), n).as("sh")): _*)
+      Similarity.shingleHashes(Normalize.canonicalText(col(textCol)), n).as("sh")): _*)
       .repartition(Par.spread(df.sparkSession), blockCols.map(col) :+ col(idCol): _*)
     val lhs = base.select((blockCols.map(col) :+ col(idCol).as("id1") :+ col("sh").as("sh1")): _*)
     val rhs = base.select((blockCols.map(col) :+ col(idCol).as("id2") :+ col("sh").as("sh2")): _*)
@@ -98,18 +82,6 @@ object Dedup {
       .filter(col("jac") >= threshold)
   }
 
-  /** Exact shingle-Jaccard near-dup pairs at scale: MinHash-LSH banding
-    * generates candidates, exact sorted-overlap Jaccard verifies — same
-    * output as the brute verifier, but the self-join is keyed by (block,
-    * band, bucket) so per-key fan-out is bounded by bucket occupancy, never
-    * block^2. The candidate stage misses a true pair at Jaccard exactly
-    * `threshold` with probability (1 - threshold^rowsPerBand)^bands; by
-    * default `bands` is DERIVED from the caller's threshold so that bound
-    * stays <= ~2e-8 at ANY threshold (e.g. t=0.5 -> 64 bands, t=0.3 -> 188,
-    * t=0.2 -> 435) — a caller lowering the threshold keeps the
-    * exhaustiveness guarantee instead of silently losing pairs. Explicit
-    * (bands, rowsPerBand) overrides are honored for tuning.
-    */
   private val BandMissBound = 2e-8
 
   def derivedBands(threshold: Double, rowsPerBand: Int): Int = {
@@ -124,6 +96,21 @@ object Dedup {
     math.max(64, b)
   }
 
+  /** Exact shingle-Jaccard near-dup pairs at scale: MinHash-LSH banding
+    * generates candidates, exact sorted-overlap Jaccard verifies — same
+    * output as the brute verifier, but the self-join is keyed by (block,
+    * band, bucket) so per-key fan-out is bounded by bucket occupancy, never
+    * block^2. The candidate stage misses a true pair at Jaccard exactly
+    * `threshold` with probability (1 - threshold^rowsPerBand)^bands; by
+    * default `bands` is DERIVED from the caller's threshold so that bound
+    * stays <= ~2e-8 at ANY threshold (e.g. t=0.5 -> 64 bands, t=0.3 -> 188,
+    * t=0.2 -> 435) — a caller lowering the threshold keeps the
+    * exhaustiveness guarantee instead of silently losing pairs. Explicit
+    * (bands, rowsPerBand) overrides are honored for tuning. With no
+    * `blockCols` this is the plain MinHash+LSH detector over the whole
+    * input (signature -> band keys -> bucket equi-join -> exact-Jaccard
+    * verify; dedup_minhash_lsh runs it at bands=32, rowsPerBand=3).
+    */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], n: Int, threshold: Double,
@@ -138,11 +125,13 @@ object Dedup {
     val sigd = materializeOnce(
       df.select((blockCols.map(col) :+ col(idCol) :+
         Similarity.minHashSig(canon, k, n).as("sig") :+
-        shingleHashes(canon, n).as("sh")): _*)
+        Similarity.shingleHashes(canon, n).as("sh")): _*)
         .repartition(Par.spread(df.sparkSession), col(idCol)))
     val banded = sigd.select((blockCols.map(col) :+ col(idCol) :+
       explode(bandKeys(col("sig"), b, rowsPerBand)).as("bk")): _*)
       .select((blockCols.map(col) :+ col(idCol) :+ col("bk.band") :+ col("bk.bkey")): _*)
+    // the bucket join carries ids only — shingle sets join back once per
+    // deduped pair, not once per colliding band
     val joinKeys = blockCols ++ Seq("band", "bkey")
     val lhs = banded.select((joinKeys.map(col) :+ col(idCol).as("id1")): _*)
     val rhs = banded.select((joinKeys.map(col) :+ col(idCol).as("id2")): _*)
@@ -168,50 +157,6 @@ object Dedup {
         xxhash64(slice(sig, b * rowsPerBand + 1, rowsPerBand)).as("bkey"))
     }: _*)
 
-  /** MinHash+LSH near-dup detection: signature -> band keys -> bucket
-    * equi-join -> exact-Jaccard verification. k = bands * rowsPerBand.
-    * Collision probability for Jaccard j is 1-(1-j^r)^b — tune (b, r) to
-    * the target threshold. The bucket join is the only shuffle and its
-    * fan-out is bounded by bucket sizes, not n^2.
-    */
-  def minHashPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      bands: Int = 32, rowsPerBand: Int = 3, shingleWidth: Int = 3,
-      verifyThreshold: Double = 0.6): DataFrame = {
-    val k = bands * rowsPerBand
-    val canon = Normalize.canonicalText(col(textCol))
-    // read three times (banding + both verify sides) — materialize once so
-    // the shingle/minhash kernels run once per row, not three times
-    val sigd = materializeOnce(
-      df.select(
-        col(idCol),
-        Similarity.minHashSig(canon, k, shingleWidth).as("sig"),
-        shingleHashes(canon, shingleWidth).as("sh"))
-        // explicit width: parallelize the per-row-heavy signature kernels
-        // even on single-split inputs (AQE would coalesce to one task)
-        .repartition(Par.spread(df.sparkSession), col(idCol)))
-    // the band bucket join carries only ids — shingle sets join back once
-    // per deduped pair, not once per colliding band
-    val banded = sigd.select(
-      col(idCol),
-      explode(bandKeys(col("sig"), bands, rowsPerBand)).as("bk"))
-      .select(col(idCol), col("bk.band"), col("bk.bkey"))
-    val lhs = banded.select(col("band"), col("bkey"), col(idCol).as("id1"))
-    val rhs = banded.select(col("band"), col("bkey"), col(idCol).as("id2"))
-    val pairs = lhs.join(rhs, Seq("band", "bkey"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .distinct()
-      // spread the per-pair exact-Jaccard verify (see ngramJaccardPairs)
-      .repartition(Par.spread(df.sparkSession), col("id1"), col("id2"))
-    val sh1 = sigd.select(col(idCol).as("id1"), col("sh").as("sh1"))
-    val sh2 = sigd.select(col(idCol).as("id2"), col("sh").as("sh2"))
-    pairs.join(sh1, "id1").join(sh2, "id2")
-      .select(col("id1"), col("id2"),
-        round(jaccardSorted(col("sh1"), col("sh2")), 4).as("jac"))
-      .filter(col("jac") >= verifyThreshold)
-  }
-
   /** SimHash near-dup detection: 64-bit word simhash, bucketed by its
     * eight 8-bit chunks (pigeonhole: hamming <= 7 guarantees at least one
     * chunk collides), verified by exact hamming distance.
@@ -222,7 +167,7 @@ object Dedup {
     // materialized once at explicit width: the simhash kernel is
     // per-row-heavy and both join branches consume the signatures —
     // uncheckpointed they would each recompute it, single-task on a
-    // single-split input (same shape as minHashPairs)
+    // single-split input (same shape as ngramJaccardPairs)
     val sigd = materializeOnce(df.select(col(idCol),
       Similarity.simHash64(Normalize.canonicalText(col(textCol))).as("sh64"))
       .repartition(Par.spread(df.sparkSession), col(idCol)))
@@ -313,6 +258,9 @@ object Dedup {
       .distinct() // diagonal tiles see both orientations of a pair
   }
 
+  /** Hyperplane seed of the embedding near-dup bucket tables. */
+  private val EmbeddingLshSeed = 0xE3BEDL
+
   /** APPROXIMATE embedding near-dup at scale: multi-table random-hyperplane
     * bucket blocking + exact-cosine verify within collided buckets. The
     * bucket join carries ids only; embeddings join back once per deduped
@@ -323,12 +271,8 @@ object Dedup {
     */
   def embeddingPairsLsh(
       df: DataFrame, idCol: String, embCol: String, threshold: Double,
-      bits: Int = 4, tables: Int = 24, seed: Long = 0xE3BEDL): DataFrame = {
-    val keyed = df.select(
-      col(idCol),
-      explode(array((0 until tables).map { t =>
-        concat(lit(s"$t:"), Similarity.rhpKey(col(embCol), bits, seed + t).cast("string"))
-      }: _*)).as("bucket"))
+      bits: Int = 4, tables: Int = 24): DataFrame = {
+    val keyed = Ann.rhpBuckets(df, idCol, idCol, embCol, bits, tables, EmbeddingLshSeed)
     val cands = keyed.select(col("bucket"), col(idCol).as("id1"))
       .join(keyed.select(col("bucket"), col(idCol).as("id2")), Seq("bucket"))
       .filter(col("id1") < col("id2"))

@@ -715,7 +715,7 @@ object ErPipeline {
     val nReused = reused.count()
     val stats = IncrementalStats(nStale, mergedScored.count() - nReused, nReused,
       nReEdges, nEdges)
-    (Result(mergedSigs, mergedSigs, toScore, mergedScored, clustered), stats)
+    (Result(mergedSigs, toScore, mergedScored, clustered), stats)
   }
 
   // -------------------------------------------------------------------
@@ -723,7 +723,6 @@ object ErPipeline {
   // -------------------------------------------------------------------
 
   final case class Result(
-      normalized: DataFrame,
       signatures: DataFrame,
       candidates: DataFrame,
       scored: DataFrame,
@@ -773,6 +772,6 @@ object ErPipeline {
       scorePairs(cands, sigs, cfg)
     }
     val clustered = stage("clusters")(clusters(sigs, scored))
-    Result(norm, sigs, cands, scored, clustered)
+    Result(sigs, cands, scored, clustered)
   }
 }

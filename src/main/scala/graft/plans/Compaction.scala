@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -16,16 +17,14 @@ object Compaction {
 
   final case class Stats(rows: Long, filesBefore: Int, filesAfter: Int)
 
-  private[graft] def partFiles(dir: String): Seq[String] = {
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    try {
-      val b = Seq.newBuilder[String]
-      listing.forEach { p =>
-        val n = p.getFileName.toString
-        if (n.startsWith("part-")) b += n
-      }
-      b.result()
-    } finally listing.close()
+  /** Part-file names under `dir`, listed through the directory's own
+    * Hadoop FileSystem — so plain paths and `file:`/`hdfs:`/`s3a:` URIs
+    * all work, as they do for the parquet read and write.
+    */
+  private[graft] def partFiles(spark: SparkSession, dir: String): Seq[String] = {
+    val path = new Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(path).toSeq.map(_.getPath.getName).filter(_.startsWith("part-"))
   }
 
   /** Rewrite `inDir` into `outDir` as ceil(rows/targetRowsPerFile)
@@ -46,6 +45,6 @@ object Compaction {
     in.repartitionByRange(files, col(sortCol))
       .sortWithinPartitions(sortCol)
       .write.mode("overwrite").parquet(outDir)
-    Stats(rows, partFiles(inDir).size, partFiles(outDir).size)
+    Stats(rows, partFiles(spark, inDir).size, partFiles(spark, outDir).size)
   }
 }

@@ -912,8 +912,8 @@ object Catalog {
       * Jaccard over the same planted corpus.
       */
     Query("dedup_minhash_lsh", (s, dir) =>
-      Dedup.minHashPairs(plantedDocs(s, dir), "doc_id", "text",
-        bands = 32, rowsPerBand = 3, shingleWidth = 3, verifyThreshold = 0.6)
+      Dedup.ngramJaccardPairs(plantedDocs(s, dir), "doc_id", "text", Nil, 3, 0.6,
+        bands = 32, rowsPerBand = 3)
         .select(col("id1").as("doc_id1"), col("id2").as("doc_id2"), col("jac")),
       """WITH aug AS (
         |  SELECT doc_id, lang, source, text FROM documents
@@ -982,16 +982,14 @@ object Catalog {
       * exact tiled join: reports the exact pair count (SQL-verifiable) and
       * whether LSH recall clears the floor the operator's parameters promise
       * (bits=4, tables=24 -> ~0.98 at cosine 0.4 — deterministic on this
-      * corpus, so the boolean is stable).
+      * corpus, so the boolean is stable). Both legs read one eager
+      * checkpoint of the raw vectors, so the parquet is scanned once.
       */
     Query("dedup_embedding_lsh", (s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val exact = Dedup.embeddingPairsExact(e, "vec_id", "embedding", 0.4)
-      val approx = Dedup.embeddingPairsLsh(e, "vec_id", "embedding", 0.4)
-      exact.join(approx.withColumn("hit", lit(1)), Seq("id1", "id2"), "left")
-        .agg(count(lit(1)).as("n_exact"),
-          (sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))).as("recall"))
-        .select(col("n_exact"), (col("recall") >= 0.9).as("recall_ok"))
+      val e = t(s, dir, "embeddings").select("vec_id", "embedding").localCheckpoint()
+      Ann.recall(Dedup.embeddingPairsExact(e, "vec_id", "embedding", 0.4),
+        Dedup.embeddingPairsLsh(e, "vec_id", "embedding", 0.4), Seq("id1", "id2"))
+        .select(col("n").as("n_exact"), (col("recall") >= 0.9).as("recall_ok"))
     },
       """SELECT CAST(count(*) AS BIGINT) AS n_exact, true AS recall_ok
         |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
@@ -1025,8 +1023,10 @@ object Catalog {
       */
     Query("ann_lsh_recall", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      Ann.lshRecall(e.filter(col("vec_id") < 20), e, "vec_id", "vec_id", "embedding", 5,
-        bits = 4, tables = 32)
+      val q = e.filter(col("vec_id") < 20)
+      Ann.recall(Ann.bruteForceTopK(q, e, "vec_id", "vec_id", "embedding", 5),
+        Ann.lshTopK(q, e, "vec_id", "vec_id", "embedding", 5, bits = 4, tables = 32),
+        Ann.TopKKeys)
         .select(col("n"), (col("recall") >= 0.9).as("recall_ok"))
     },
       AnnRecallSql),
@@ -1042,8 +1042,10 @@ object Catalog {
       */
     Query("ann_ivf_recall", (s, dir) => {
       val e = t(s, dir, "embeddings")
-      Ann.ivfRecall(e.filter(col("vec_id") < 20), e, "vec_id", "vec_id", "embedding", 5,
-        cells = 16, nProbe = 8)
+      val q = e.filter(col("vec_id") < 20)
+      Ann.recall(Ann.bruteForceTopK(q, e, "vec_id", "vec_id", "embedding", 5),
+        Ann.ivfTopK(q, e, "vec_id", "vec_id", "embedding", 5, cells = 16, nProbe = 8),
+        Ann.TopKKeys)
         .select(col("n"), (col("recall") >= 0.7).as("recall_ok"))
     },
       AnnRecallSql),
@@ -1079,14 +1081,10 @@ object Catalog {
         java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), "graft_annidx_")
       val idx = graft.operators.AnnIndex.buildIvf(s, root, e, "vec_id", "embedding",
         cells = 16)
-      val approx = graft.operators.AnnIndex.ivfTopK(
-        e.filter(col("vec_id") < 20), idx, "vec_id", "embedding", 5, nProbe = 8)
-      val exact = Ann.bruteForceTopK(e.filter(col("vec_id") < 20), e,
-        "vec_id", "vec_id", "embedding", 5)
-      exact.join(approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
-        Seq("query_id", "neighbor_id"), "left")
-        .agg((sum(coalesce(col("hit"), lit(0))).cast("double") / count(lit(1))).as("recall"),
-          count(lit(1)).as("n"))
+      val q = e.filter(col("vec_id") < 20)
+      Ann.recall(Ann.bruteForceTopK(q, e, "vec_id", "vec_id", "embedding", 5),
+        graft.operators.AnnIndex.ivfTopK(q, idx, "vec_id", "embedding", 5, nProbe = 8),
+        Ann.TopKKeys)
         .select(col("n"), (col("recall") >= 0.7).as("recall_ok"))
     },
       AnnRecallSql),

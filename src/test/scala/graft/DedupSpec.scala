@@ -42,7 +42,8 @@ class DedupSpec extends SparkSpec {
       .select("id1", "id2")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val lsh = Dedup.minHashPairs(docs, "doc_id", "text", verifyThreshold = 0.6)
+    val lsh = Dedup.ngramJaccardPairs(docs, "doc_id", "text", Nil, 3, 0.6,
+      bands = 32, rowsPerBand = 3)
       .select("id1", "id2")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -117,7 +118,8 @@ class DedupSpec extends SparkSpec {
     // each query its own blocks — both plans must read from materialized
     // RDD scans, not recompute the kernels.
     val blocked = docs.withColumn("lang", lit("en")).withColumn("source", lit("s"))
-    val q1 = Dedup.minHashPairs(docs, "doc_id", "text", verifyThreshold = 0.6)
+    val q1 = Dedup.ngramJaccardPairs(docs, "doc_id", "text", Nil, 3, 0.6,
+      bands = 32, rowsPerBand = 3)
     val q2 = Dedup.ngramJaccardPairs(blocked, "doc_id", "text",
       Seq("lang", "source"), 3, 0.5)
     // both signature tables are already materialized per-call; the final
@@ -170,8 +172,10 @@ class DedupSpec extends SparkSpec {
         (x + 1e-2 * (mix64(i * 16 + d).toDouble / Long.MaxValue)).toFloat }
       (i, v)
     }.toDF("vec_id", "embedding")
-    val recall = Ann.lshRecall(e.filter($"vec_id" < 20), e, "vec_id", "vec_id",
-      "embedding", 5, bits = 6, tables = 8)
+    val q = e.filter($"vec_id" < 20)
+    val recall = Ann.recall(Ann.bruteForceTopK(q, e, "vec_id", "vec_id", "embedding", 5),
+      Ann.lshTopK(q, e, "vec_id", "vec_id", "embedding", 5, bits = 6, tables = 8),
+      Ann.TopKKeys)
       .head().getDouble(0)
     info(s"lsh recall=$recall")
     assert(recall >= 0.9, s"LSH recall $recall too low")
@@ -186,15 +190,27 @@ class DedupSpec extends SparkSpec {
         (x + 1e-2 * (mix64(i * 16 + d).toDouble / Long.MaxValue)).toFloat }
       (i, v)
     }.toDF("vec_id", "embedding")
-    val r = Ann.ivfRecall(e.filter($"vec_id" < 20), e, "vec_id", "vec_id",
-      "embedding", 5, cells = 20, nProbe = 3).head()
-    val recall = r.getDouble(0)
+    val q = e.filter($"vec_id" < 20)
+    def measure = Ann.recall(Ann.bruteForceTopK(q, e, "vec_id", "vec_id", "embedding", 5),
+      Ann.ivfTopK(q, e, "vec_id", "vec_id", "embedding", 5, cells = 20, nProbe = 3),
+      Ann.TopKKeys).head().getDouble(0)
+    val recall = measure
     info(s"ivf recall=$recall (probing 3/20 cells)")
     assert(recall >= 0.9, s"IVF recall $recall too low on clustered vectors")
     // deterministic: trained on a hash-ordered sample, driver-side Lloyd
-    val again = Ann.ivfRecall(e.filter($"vec_id" < 20), e, "vec_id", "vec_id",
-      "embedding", 5, cells = 20, nProbe = 3).head().getDouble(0)
+    val again = measure
     assert(recall === again)
+  }
+
+  test("recall: share of exact rows the approximate result holds, over the exact count") {
+    val exact = Seq((1L, 10L), (1L, 11L), (2L, 10L), (2L, 12L)).toDF("query_id", "neighbor_id")
+    // one exact row missing, one extra approximate row that must not count
+    val approx = Seq((1L, 10L), (1L, 11L), (2L, 12L), (2L, 13L)).toDF("query_id", "neighbor_id")
+    val r = Ann.recall(exact, approx, Ann.TopKKeys).head()
+    assert(r.getDouble(0) === 0.75 && r.getLong(1) === 4L)
+    assert(Ann.recall(exact, exact, Ann.TopKKeys).head().getDouble(0) === 1.0)
+    val none = Ann.recall(exact, approx.filter($"query_id" === 9L), Ann.TopKKeys).head()
+    assert(none.getDouble(0) === 0.0 && none.getLong(1) === 4L)
   }
 
   test("int8 quantization: bounded round-trip error, near-perfect recall") {

@@ -43,6 +43,12 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(600))
   }
 
+  test("embedding LSH self-check reads embeddings.parquet once: both legs scan one checkpoint") {
+    val p = executed("dedup_embedding_lsh")
+    assert(!p.contains("FileScan"), "a leg re-scans the parquet:\n" + p.take(1200))
+    assert(p.contains("ExistingRDD"), p.take(600))
+  }
+
   test("ngram-jaccard candidates come from banded equi-joins, never cartesian") {
     val p = executed("dedup_ngram_jaccard")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p.take(600))

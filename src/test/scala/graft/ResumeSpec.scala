@@ -473,12 +473,14 @@ class ResumeSpec extends SparkSpec {
 
   test("compaction: fewer range-disjoint files, content byte-preserved") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_compact_spec").toString
-    try {
+    val local = Files.createTempDirectory("graft_compact_spec")
+    // the same pass on a plain path and on a `file:` URI root: both the
+    // parquet IO and the part-file listing resolve through Hadoop
+    try for (root <- Seq(s"$local/plain", local.resolve("uri").toUri.toString)) {
       val src = (0L until 1000L).map(i => (i, s"doc$i", (i % 7).toString))
         .toDF("doc_id", "body", "tag")
       src.repartition(16).write.mode("overwrite").parquet(s"$root/frag")
-      assert(graft.plans.Compaction.partFiles(s"$root/frag").size === 16)
+      assert(graft.plans.Compaction.partFiles(spark, s"$root/frag").size === 16)
       val st = graft.plans.Compaction.compact(
         spark, s"$root/frag", s"$root/out", "doc_id", 250L)
       assert(st.rows === 1000L && st.filesBefore === 16 && st.filesAfter === 4)
@@ -495,6 +497,6 @@ class ResumeSpec extends SparkSpec {
         case Array(a, b) => assert(a.getLong(2) < b.getLong(1))
         case _ =>
       }
-    } finally rmrf(root)
+    } finally rmrf(local.toString)
   }
 }
