@@ -564,49 +564,9 @@ object ErPipeline {
       .filter(col("_prev_ts").isNull || col(ts) > col("_prev_ts"))
       .drop("_prev_ts")
 
-  final case class IncrementalStats(
-      staleRowCount: Long, rescoredPairs: Long, reusedPairs: Long,
-      /** match edges re-clustered / total current match edges; -1 when the
-        * caller did not supply prior clusters (global recompute).
-        */
-      clusterEdgesReclustered: Long = -1L, clusterEdgesTotal: Long = -1L)
-
-  /** Incremental transitive clustering. Invariant: every current match
-    * edge has both endpoints inside affected clusters or neither. Reused
-    * edges were prior match edges, so both endpoints share a prior
-    * cluster; every re-scored edge has both endpoints in `affectedNodes`;
-    * a prior edge a stale record dropped lies inside that record's prior
-    * cluster, which is affected through the record itself. So prior
-    * assignments of clusters holding no affected node are reused verbatim
-    * (their min-id roots are untouched), and only members of affected
-    * clusters plus brand-new nodes re-converge, over the edges that
-    * touch them. Returns (clusters, edges re-clustered, total current
-    * edges).
-    */
-  private[graft] def incrementalClusters(
-      mergedSigs: DataFrame,
-      mergedScored: DataFrame,
-      priorClusters: DataFrame,
-      affectedNodes: DataFrame): (DataFrame, Long, Long) = {
-    val affected = affectedNodes.select(col("url")).distinct()
-    val affectedClusters = priorClusters
-      .join(affected, Seq("url"), "left_semi")
-      .select(col("cluster_id")).distinct()
-    // re-select after the join: a usingColumns join moves its key to the
-    // front, and positional consumers expect (url, cluster_id)
-    val reusedAssign = priorClusters
-      .join(affectedClusters, Seq("cluster_id"), "left_anti")
-      .select(col("url"), col("cluster_id"))
-    val reVertices = mergedSigs.select(col("url"))
-      .join(reusedAssign.select(col("url")), Seq("url"), "left_anti")
-      .localCheckpoint()
-    val edges = mergedScored.filter(col("matches")).select("url1", "url2")
-    // by the invariant, an edge with url1 re-clustering has url2 too
-    val touchingEdges = edges
-      .join(reVertices.withColumnRenamed("url", "url1"), Seq("url1"), "left_semi")
-      .localCheckpoint()
-    val re = Clustering.clusterAll(reVertices, "url", touchingEdges, "url1", "url2")
-    (reusedAssign.unionByName(re), touchingEdges.count(), edges.count())
+  final case class IncrementalStats(staleRowCount: Long, rescoredPairs: Long, reusedPairs: Long) {
+    @deprecated("incremental runs re-cluster globally; always -1", "0.1.0")
+    def clusterEdgesReclustered: Long = -1L
   }
 
   /** Incremental run (I1 + I2 end-to-end): given the previous run's
@@ -621,15 +581,19 @@ object ErPipeline {
     * record shifted block membership or hot-block ranks — they are new in
     * the candidate set, so they get scored. Previously scored pairs that
     * dropped out of the candidate set persist (the reference keeps its
-    * comparisons table across runs, run_search.py:416-434). With
-    * `priorClusters` supplied, clustering is incremental too (see
-    * incrementalClusters); without it the merged pair table re-clusters
-    * globally. `priorClusters` must be the clusters of the same run as
-    * `priorSignatures` and `priorScored`.
+    * comparisons table across runs, run_search.py:416-434).
+    *
+    * The merged pair table re-clusters globally, as `run` clusters. Reusing
+    * the prior clusters of components no stale record touched was slower
+    * on every measured seed: on erbench's 2%-stale snapshot, seeds 1-5,
+    * median `wall_s` 7.46 s with reuse against 6.67 s global, and 20-23
+    * more Spark jobs per 80-entity IncrementalSpec delta.
     *
     * The inputs are read several times, so pass materialized frames
-    * (checkpointed, cached or read from storage). The returned frames are
-    * checkpointed; the caller has nothing to release.
+    * (checkpointed, cached or read from storage). The returned signatures
+    * and scored pairs are checkpointed; `Result.candidates` (the pairs
+    * scored in this run) is not materialized. The caller has nothing to
+    * release.
     *
     * With cfg.batchLimit > 0, at most batchLimit stale rows are processed,
     * oldest warc_ts first (url tiebreak) — the reference's per-run cap
@@ -640,8 +604,7 @@ object ErPipeline {
       pages: DataFrame,
       priorSignatures: DataFrame,
       priorScored: DataFrame,
-      cfg: Config,
-      priorClusters: Option[DataFrame] = None): (Result, IncrementalStats) = {
+      cfg: Config): (Result, IncrementalStats) = {
     val staleAll = staleRows(pages, priorSignatures.select(col("url"), col("warc_ts")),
       "url", "warc_ts")
     // Every engine-computed intermediate read more than once below is
@@ -693,7 +656,6 @@ object ErPipeline {
     // to score: every current candidate not covered by a reusable score
     val toScore = allCands
       .join(reused.select("url1", "url2"), Seq("url1", "url2"), "left_anti")
-      .localCheckpoint()
     val rescored = scorePairs(toScore, mergedSigs, cfg)
 
     val mergedScored = reused
@@ -701,22 +663,22 @@ object ErPipeline {
       .unionByName(rescored)
       .localCheckpoint()
 
-    val (clustered, nReEdges, nEdges) = priorClusters match {
-      case Some(pc) =>
-        // affected = stale records + endpoints of every re-scored pair
-        val affectedNodes = staleUrls
-          .unionByName(toScore.select(col("url1").as("url")))
-          .unionByName(toScore.select(col("url2").as("url")))
-        incrementalClusters(mergedSigs, mergedScored, pc, affectedNodes)
-      case None =>
-        (clusters(mergedSigs, mergedScored), -1L, -1L)
-    }
     // mergedScored is the bag union of reused and rescored
     val nReused = reused.count()
-    val stats = IncrementalStats(nStale, mergedScored.count() - nReused, nReused,
-      nReEdges, nEdges)
-    (Result(mergedSigs, toScore, mergedScored, clustered), stats)
+    val stats = IncrementalStats(nStale, mergedScored.count() - nReused, nReused)
+    (Result(mergedSigs, toScore, mergedScored, clusters(mergedSigs, mergedScored)), stats)
   }
+
+  /** The former signature: `priorClusters` is ignored. */
+  @deprecated("incremental runs re-cluster globally; drop priorClusters", "0.1.0")
+  def runIncremental(
+      spark: SparkSession,
+      pages: DataFrame,
+      priorSignatures: DataFrame,
+      priorScored: DataFrame,
+      cfg: Config,
+      priorClusters: Option[DataFrame]): (Result, IncrementalStats) =
+    runIncremental(spark, pages, priorSignatures, priorScored, cfg)
 
   // -------------------------------------------------------------------
   // orchestration with checkpoint/resume

@@ -30,8 +30,7 @@ object Compaction {
   /** Rewrite `inDir` into `outDir` as ceil(rows/targetRowsPerFile)
     * range-disjoint files sorted by `sortCol`. Content is preserved
     * exactly (same rows, any order); the caller owns `outDir` cleanup.
-    */
-  /** `rowsHint >= 0` skips the row-count scan (callers that already
+    * `rowsHint >= 0` skips the row-count scan (callers that already
     * counted the input pass it through — one less full read of the
     * directory being compacted); negative means count here.
     */

@@ -246,6 +246,18 @@ class PlanSpec extends SparkSpec {
     assert(rnConds.isEmpty, s"join with a residual condition on rn: $rnConds")
   }
 
+  test("building the candidates plan starts at most 4 Spark jobs") {
+    val pages = WebPageGen.pages(spark, 2000L, 1L).toDF
+    val sigs = ErPipeline.signatures(ErPipeline.normalize(ErPipeline.extract(pages)))
+      .localCheckpoint()
+    // PrefixSum.withinKeys checkpoints the hot-block ranks eagerly, even
+    // with no hot key. Measured: 4 jobs, 9 tasks (5 and 17 at 20,000
+    // entities).
+    val (_, jobs) = jobsOf(ErPipeline.candidates(sigs, ErPipeline.Config()))
+    info(s"${jobs.size} jobs, ${jobs.map(_.tasks).sum} tasks")
+    assert(jobs.size <= 4, s"${jobs.size} jobs: ${jobs.map(_.name).mkString(", ")}")
+  }
+
   test("scorePairs joins stay equi (hash/sort-merge) on url keys") {
     val pages = WebPageGen.pages(spark, 50L).toDF
     val sigs = ErPipeline.signatures(ErPipeline.normalize(ErPipeline.extract(pages)))

@@ -2,14 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,22 +23,6 @@ class ResumeSpec extends SparkSpec {
   private def tmpRoot(): String = {
     val p = Files.createTempDirectory("graft-stages")
     p.toString
-  }
-
-  /** The properties of every job `body` starts, in start order. */
-  private def jobsOf(body: => Unit): Seq[java.util.Properties] = {
-    val sc = spark.sparkContext
-    val props = new ConcurrentLinkedQueue[java.util.Properties]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = props.add(e.properties)
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    props.asScala.toSeq
   }
 
   /** Rewrites a stage's manifest JSON in place. */
@@ -307,7 +288,7 @@ class ResumeSpec extends SparkSpec {
     val df = spark.range(0, 1000, 1, 4).toDF("id").withColumn("v", col("id") * 3)
       .localCheckpoint()
     try {
-      val jobs = jobsOf(StageStore.runStage(spark, root, "s7", "v1", "fp")(df))
+      val (_, jobs) = jobsOf(StageStore.runStage(spark, root, "s7", "v1", "fp")(df))
       assert(jobs.size === 1, "the write is the commit's only job; nothing is read back")
     } finally rmrf(root)
   }
@@ -317,10 +298,8 @@ class ResumeSpec extends SparkSpec {
     try {
       def make(): DataFrame = spark.range(0, 1000, 1, 4).toDF("id").withColumn("v", col("id") * 3)
       StageStore.runStage(spark, root, "s11", "v1", "fp")(make())
-      var resumed: DataFrame = null
-      val jobs = jobsOf {
-        resumed = StageStore.runStage(spark, root, "s11", "v1", "fp")(fail("must resume"))
-      }
+      val (resumed, jobs) =
+        jobsOf(StageStore.runStage(spark, root, "s11", "v1", "fp")(fail("must resume")))
       assert(jobs.size === 1,
         "the lineage check is the resume's only job; the schema comes from the manifest")
       assert(resumed.count() === 1000)
@@ -333,14 +312,14 @@ class ResumeSpec extends SparkSpec {
     val root = tmpRoot()
     try {
       // a shuffle: under AQE its map stage runs as a job of its own
-      val jobs = jobsOf {
+      val (_, jobs) = jobsOf {
         StageStore.runStage(spark, root, "s12", "v1", "fp") {
           spark.range(0, 1000, 1, 4).toDF("id")
             .groupBy((col("id") % 10).as("k")).agg(count(lit(1)).as("n"))
         }
       }
       assert(jobs.size >= 2, s"expected a shuffle-stage job and the write job, got ${jobs.size}")
-      val missing = jobs.count(p => p.getProperty("spark.sql.execution.id") == null)
+      val missing = jobs.count(_.properties.getProperty("spark.sql.execution.id") == null)
       assert(missing === 0, s"$missing of ${jobs.size} jobs ran outside a SQL execution")
     } finally rmrf(root)
   }
