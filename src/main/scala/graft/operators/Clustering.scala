@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Transitive closure / entity clustering — NEW vs the reference (the
   * reference stops at the pair table, idrt/algorithm/run_search.py:524-536;

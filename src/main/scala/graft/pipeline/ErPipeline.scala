@@ -136,8 +136,9 @@ object ErPipeline {
     * name_norm_rev, email_norm, phone_norm, state_norm, zip_norm, each
     * read as listed at `normalize`, then:
     *  - embedding: scoring's cosine, and the LSH keys here;
-    *  - block_keys: candidate generation and `runIncremental`'s touched
-    *    blocks.
+    *  - block_keys: candidate generation, in `run` and in
+    *    `runIncremental`, which regenerates candidates globally over the
+    *    merged signatures (cheaper than scoping them to touched blocks).
     */
   def signatures(normalized: DataFrame, cfg: Config = Config()): DataFrame = {
     val embedInput = concat_ws("|", nameSorted, col("email_norm"), col("phone_norm"))
@@ -180,30 +181,7 @@ object ErPipeline {
     * equi join) so no key is ever quadratic — the salting/capping
     * strategy of SURVEY.md par.4.
     */
-  def candidates(signatures: DataFrame, cfg: Config = Config()): DataFrame =
-    candidatesScoped(signatures, None, cfg)
-
-  /** Exploded (block key, url) rows entering candidate generation,
-    * optionally restricted to a set of touched block keys (the incremental
-    * path). The semi join filters by KEY, not by record: every member of a
-    * touched block stays, so in-block sizing/ranking see the full block
-    * and emit exactly what a full run would emit for those blocks.
-    */
-  private[graft] def keyedBlocks(
-      signatures: DataFrame, touchedBlocks: Option[DataFrame]): DataFrame = {
-    val all = signatures.select(explode(col("block_keys")).as("bk"), col("url"))
-    touchedBlocks match {
-      // bk-keyed shuffled semi join (the touched set is O(stale x keys) —
-      // too big to assume broadcast at production scale; AQE broadcasts
-      // it at runtime when it is small)
-      case Some(t) => all.join(t.select(col("bk")), Seq("bk"), "left_semi")
-      case None => all
-    }
-  }
-
-  private[graft] def candidatesScoped(
-      signatures: DataFrame, touchedBlocks: Option[DataFrame],
-      cfg: Config): DataFrame = {
+  def candidates(signatures: DataFrame, cfg: Config = Config()): DataFrame = {
     // ONE explicit bk-keyed exchange feeds every consumer below (hot-key
     // sizing agg, cold collect_list agg, hot rank) — each would
     // otherwise plan its own exchange, and AQE would coalesce them by
@@ -214,7 +192,7 @@ object ErPipeline {
     // constant); per-key skew is unchanged vs the implicit exchanges —
     // cold keys are <= maxBlock rows and hot keys already flow through
     // the ranked path built for them.
-    val keyed = keyedBlocks(signatures, touchedBlocks)
+    val keyed = signatures.select(explode(col("block_keys")).as("bk"), col("url"))
       .repartition(graft.core.Par.spread(signatures.sparkSession), col("bk"))
     // Two-phase block sizing that satisfies BOTH measured lessons:
     //  - r3: joining a full per-key size table back onto `keyed` doubles
@@ -572,16 +550,21 @@ object ErPipeline {
   /** Incremental run (I1 + I2 end-to-end): given the previous run's
     * signatures + scored pairs and a new snapshot of the input, only
     * new/updated urls are re-extracted/normalized/signed. Candidate pairs
-    * are regenerated only inside blocks a stale record touched (O(stale),
-    * see the touched-blocks derivation in the body), then
-    * a pair is REUSED verbatim when it was scored before and neither
-    * endpoint is stale (scores are pure functions of the two records);
-    * every other current candidate is scored. This covers pairs between
-    * two non-stale records that only became candidates because a stale
-    * record shifted block membership or hot-block ranks — they are new in
-    * the candidate set, so they get scored. Previously scored pairs that
-    * dropped out of the candidate set persist (the reference keeps its
-    * comparisons table across runs, run_search.py:416-434).
+    * are regenerated globally over the merged signatures (the `candidates`
+    * call `run` makes), then a pair is REUSED verbatim when it was scored
+    * before and neither endpoint is stale (scores are pure functions of
+    * the two records); every other current candidate is scored. This
+    * covers pairs between two non-stale records that only became
+    * candidates because a stale record shifted block membership or
+    * hot-block ranks — they are new in the candidate set, so they get
+    * scored. Previously scored pairs that dropped out of the candidate set
+    * persist (the reference keeps its comparisons table across runs,
+    * run_search.py:416-434).
+    *
+    * Scoping candidate generation to the blocks a stale record touched was
+    * slower: its semi join still explodes and shuffles every signature
+    * row (6,000 entities, 2% stale: 5.05 s, 30 jobs, 25.1 MB shuffle write,
+    * against 2.76 s, 21 jobs, 22.5 MB for the global call).
     *
     * The merged pair table re-clusters globally, as `run` clusters. Reusing
     * the prior clusters of components no stale record touched was slower
@@ -627,27 +610,7 @@ object ErPipeline {
       .localCheckpoint()
 
     val staleUrls = stale.select(col("url"))
-    // O(stale) candidate generation, not O(corpus): only blocks TOUCHED by
-    // a stale record can produce pairs that need (re)scoring — a block no
-    // stale record entered or left has identical membership, hence
-    // identical sizing, ranking and emitted pairs as the prior run, and
-    // all of those pairs are already in the reused set below. Touched =
-    // keys of the stale records' NEW signatures (blocks gaining a member)
-    // UNION keys of their PRIOR signatures (blocks losing one — departure
-    // shifts the survivors' neighborhood ranks too). At a 0.1% daily
-    // delta this scans ~0.1% of the exploded key table instead of all of
-    // it (the reference's core value proposition, README.md:104,122).
-    // The per-record cap ranks pairs GLOBALLY by shared-key counts, so a
-    // capped config falls back to the full recompute for exact parity.
-    val allCands =
-      if (cfg.maxCandidatesPerRecord == 0) {
-        val touched = priorSignatures
-          .join(staleUrls, Seq("url"), "left_semi")
-          .select(explode(col("block_keys")).as("bk"))
-          .unionByName(staleSigs.select(explode(col("block_keys")).as("bk")))
-          .distinct()
-        candidatesScoped(mergedSigs, Some(touched), cfg)
-      } else candidates(mergedSigs, cfg)
+    val allCands = candidates(mergedSigs, cfg)
     // reusable: previously scored AND both endpoints untouched
     val reused = priorScored
       .join(staleUrls.withColumnRenamed("url", "url1"), Seq("url1"), "left_anti")

@@ -13,7 +13,8 @@ import graft.sources.WebPageGen.{Contact, LabeledPage}
 /** SURVEY.md par.5 item 5: an incremental re-run with m updated rows
   * re-scores only the affected pairs and produces exactly the same final
   * state a full recompute would: across deltas that bump timestamps, add
-  * entities, split a cluster and join two, and under a batch cap.
+  * entities, split a cluster and join two, and under a batch cap and a
+  * per-record candidate cap.
   */
 class IncrementalSpec extends SparkSpec {
   import IncrementalSpec._
@@ -63,11 +64,14 @@ class IncrementalSpec extends SparkSpec {
   test("incremental run rescoring == full recompute; untouched pairs reused") {
     val cfg = ErPipeline.Config()
     val pages0 = WebPageGen.pages(spark, 80L, Seed).toDF.localCheckpoint()
-    val full0 = ErPipeline.run(spark, pages0, cfg)
-    val sigs0 = full0.signatures.localCheckpoint()
-    val scored0 = full0.scored.localCheckpoint()
     def nClusters(c: DataFrame): Long = c.select("cluster_id").distinct().count()
-    assert(nClusters(full0.clusters) === 320L)
+    /** Signatures and scored pairs of a full run of `pages0` under `c`. */
+    def priors(c: ErPipeline.Config): (DataFrame, DataFrame) = {
+      val full0 = ErPipeline.run(spark, pages0, c)
+      assert(nClusters(full0.clusters) === 320L)
+      (full0.signatures.localCheckpoint(), full0.scored.localCheckpoint())
+    }
+    val uncapped = priors(cfg)
 
     // identical html/text under a bumped warc_ts: scores must not change
     // values, but those pairs MUST be re-scored
@@ -87,17 +91,21 @@ class IncrementalSpec extends SparkSpec {
       Delta("(c) join", joined, 317L),
       Delta("(d) split + join + 3 new entities", mixed, 335L),
       // the 4 oldest stale rows are the split bases of entities 1-4
-      Delta("(e) (d) at batchLimit 4", mixed, 324L, batchLimit = 4, processed = Some(split.take(4))))
+      Delta("(e) (d) at batchLimit 4", mixed, 324L, batchLimit = 4, processed = Some(split.take(4))),
+      // the per-record cap ranks pairs globally; priors come from a capped run
+      Delta("(f) (d) at maxCandidatesPerRecord 3", mixed, 335L, cap = 3))
 
     deltas.foreach { d =>
       val pages1 = snapshot(pages0, d.changed)
       val processed = d.processed.getOrElse(d.changed)
-      val fullRes = ErPipeline.run(spark, snapshot(pages0, processed), cfg)
+      val dCfg = cfg.copy(maxCandidatesPerRecord = d.cap)
+      val (sigs0, scored0) = if (d.cap == 0) uncapped else priors(dCfg)
+      val fullRes = ErPipeline.run(spark, snapshot(pages0, processed), dCfg)
       assert(nClusters(fullRes.clusters) === d.clusters, s"${d.name}: precondition")
 
       val ((inc, stats, incClusters), jobs) = jobsOf {
         val (inc, stats) = ErPipeline.runIncremental(spark, pages1, sigs0, scored0,
-          cfg.copy(batchLimit = d.batchLimit))
+          dCfg.copy(batchLimit = d.batchLimit))
         (inc, stats, clustersOf(inc.clusters))
       }
       val tasks = jobs.map(_.tasks).sum
@@ -105,51 +113,20 @@ class IncrementalSpec extends SparkSpec {
         s"reused=${stats.reusedPairs} jobs=${jobs.size} tasks=$tasks")
       // the job shape keeps a cached shuffle at 1,024 partitions; the
       // incremental path must not pay that per intermediate. Measured per
-      // delta: 43-54 jobs and 122-217 tasks (44-56 and 126-222 at 94dba0c).
+      // delta: 37-44 jobs and 108-179 tasks (43-54 and 122-217 at 2966240,
+      // whose candidates were scoped to the blocks a stale record touched).
       val largest = jobs.sortBy(-_.tasks).take(5).map(j => s"job ${j.id} (${j.name}): ${j.tasks}")
       assert(tasks <= 1000L,
         s"${d.name}: $tasks tasks in ${jobs.size} jobs, largest ${largest.mkString(", ")}")
+      // jobs: 44 at most over 3 full-suite runs, plus a margin of 4; the
+      // touched-block candidate path ran 53-54 on deltas (a), (b) and (d)
+      assert(jobs.size <= 48,
+        s"${d.name}: ${jobs.size} jobs, largest ${largest.mkString(", ")}")
       assert(stats.staleRowCount === processed.size.toLong, d.name)
       assert(stats.reusedPairs > 0, s"${d.name}: unchanged pairs must be reused, not recomputed")
       assertSame(s"${d.name}: scored pairs", pairsOf(inc.scored), pairsOf(fullRes.scored))
       assertSame(s"${d.name}: clusters", incClusters, clustersOf(fullRes.clusters))
     }
-  }
-
-  test("incremental candidate generation keys O(stale-touched blocks), not O(corpus)") {
-    val cfg = ErPipeline.Config()
-    val pages0 = WebPageGen.pages(spark, 200L).toDF.cache()
-    val full0 = ErPipeline.run(spark, pages0, cfg)
-    val sigs0 = full0.signatures.cache()
-    sigs0.count()
-
-    // a small delta: 3 entities' base pages bumped
-    val bumped = pages0
-      .filter(col("url").endsWith("/base"))
-      .orderBy("url").limit(3)
-      .withColumn("warc_ts", col("warc_ts") + expr("INTERVAL 1 DAY"))
-    val pages1 = pages0
-      .join(bumped.select("url"), Seq("url"), "left_anti")
-      .unionByName(bumped)
-      .cache()
-
-    val stale = ErPipeline.staleRows(pages1, sigs0.select("url", "warc_ts"), "url", "warc_ts")
-    val staleSigs = ErPipeline.signatures(
-      ErPipeline.normalize(ErPipeline.extract(stale)), cfg)
-    val touched = sigs0
-      .join(stale.select("url"), Seq("url"), "left_semi")
-      .select(explode(col("block_keys")).as("bk"))
-      .unionByName(staleSigs.select(explode(col("block_keys")).as("bk")))
-      .distinct()
-
-    val fullKeyed = ErPipeline.keyedBlocks(sigs0, None).count()
-    val scopedKeyed = ErPipeline.keyedBlocks(sigs0, Some(touched)).count()
-    info(s"keyed rows: full=$fullKeyed scoped=$scopedKeyed touchedBlocks=${touched.count()}")
-    // the candidate stage's keyed input must shrink with the stale block
-    // population — 3 stale entities out of 200 must not re-key the corpus
-    assert(scopedKeyed < fullKeyed / 4,
-      s"scoped keyed rows $scopedKeyed not proportional to stale blocks (full $fullKeyed)")
-    assert(scopedKeyed > 0L)
   }
 
   test("priors with columns the signatures no longer carry give the same clusters") {
@@ -215,8 +192,9 @@ object IncrementalSpec {
   /** One delta of the 80-entity corpus: the snapshot replaces or adds the
     * `changed` pages; the run processes `processed` of them (all unless
     * batchLimit caps it); a full run of the processed snapshot has
-    * `clusters` clusters.
+    * `clusters` clusters. `cap` is the maxCandidatesPerRecord of the
+    * priors, the full run and the incremental run.
     */
   final case class Delta(name: String, changed: Seq[WebPage], clusters: Long,
-      batchLimit: Int = 0, processed: Option[Seq[WebPage]] = None)
+      batchLimit: Int = 0, cap: Int = 0, processed: Option[Seq[WebPage]] = None)
 }

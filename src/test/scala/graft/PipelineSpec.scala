@@ -325,4 +325,13 @@ class PipelineSpec extends SparkSpec {
       assert(res.signatures.columns.toSeq === expected)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(root)
   }
+
+  test("candidate pairs at 2,000 entities keep their fingerprint") {
+    // pinned on the candidate path every run and incremental run takes;
+    // any change to pairing, hot-block bounding or the dedup shows here
+    val sigs = ErPipeline.signatures(ErPipeline.normalize(ErPipeline.extract(
+      WebPageGen.pages(spark, 2000L, 1L).toDF)), cfg).localCheckpoint()
+    val cands = ErPipeline.candidates(sigs, cfg).select("url1", "url2", "block_key")
+    assert(graft.plans.StageStore.fingerprint(cands) === "93d750561bb3e800-71875")
+  }
 }
