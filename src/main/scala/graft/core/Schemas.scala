@@ -1,19 +1,5 @@
 package graft.core
 
-/** Small filesystem helpers shared by operators/tests. */
-object Fs {
-  /** Recursive delete with the walk stream closed (Files.walk leaks a
-    * directory handle if the stream is abandoned).
-    */
-  def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    if (!java.nio.file.Files.exists(dir)) return
-    val walk = java.nio.file.Files.walk(dir)
-    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally walk.close()
-  }
-}
-
 /** Shared partitioning helpers. */
 object Par {
   /** Explicit width for exchanges feeding pair-exploding or per-row-heavy

@@ -49,8 +49,8 @@ object ErPipeline {
       // 16-bit buckets keep mean occupancy ~n/65k per table; at larger n
       // raise bits ~ log2(n/4) so in-bucket pairing stays linear in n
       lshBits: Int = 16,
+      // 0 = no LSH keys: exact blocking only
       lshTables: Int = 2,
-      useLsh: Boolean = true,
       // The reference's n_closest cap (run_search.py:148-150): bound each
       // record's candidate fan-out to its strongest maxCandidatesPerRecord
       // pairs (most shared block keys first, url tiebreak). 0 = uncapped.
@@ -155,12 +155,10 @@ object ErPipeline {
     // can't reach. Records with strong keys skip it — their LSH buckets
     // would only add redundant candidates that grow with corpus size.
     val weak = length(col("email_norm")) === 0 && length(col("phone_norm")) === 0
-    val lshKeys: Seq[Column] = if (cfg.useLsh) {
-      (0 until cfg.lshTables).map { t =>
-        when(weak, concat(lit(s"h$t:"),
-          Similarity.rhpKey(col("embedding"), cfg.lshBits, 0x5EED0000L + t).cast("string")))
-      }
-    } else Seq.empty
+    val lshKeys: Seq[Column] = (0 until cfg.lshTables).map { t =>
+      when(weak, concat(lit(s"h$t:"),
+        Similarity.rhpKey(col("embedding"), cfg.lshBits, 0x5EED0000L + t).cast("string")))
+    }
     val allKeys =
       if (lshKeys.isEmpty) exactKeys
       else concat(exactKeys, array(lshKeys: _*))
@@ -676,12 +674,9 @@ object ErPipeline {
     }
 
     val norm = stage("normalize")(normalize(extract(pages)))
-    // every cfg field signatures() reads is fingerprinted (useLsh gates
-    // whether block_keys carry LSH keys at all — omitting it would serve
-    // stale cached signatures after a toggle)
+    // every cfg field signatures() reads is fingerprinted
     val sigsStage = stage("signatures", Map("embedDim" -> cfg.embedDim.toString,
-      "lshBits" -> cfg.lshBits.toString, "lshTables" -> cfg.lshTables.toString,
-      "useLsh" -> cfg.useLsh.toString)) {
+      "lshBits" -> cfg.lshBits.toString, "lshTables" -> cfg.lshTables.toString)) {
       signatures(norm, cfg)
     }
     // candidates (sizing agg + keyed join) and scorePairs (two feature

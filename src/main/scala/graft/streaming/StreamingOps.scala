@@ -1,13 +1,14 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.core.Scratch
+import graft.plans.Compaction
 
 /** Structured-Streaming operators. The reference has no true streaming
   * (SURVEY.md par.2.10) — its incrementality is batch + timestamps; here the
@@ -18,33 +19,20 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingOps {
 
-  private val counter = new AtomicInteger(0)
-
   /** Sink directory of the most recent wrapper run — test hook so specs
     * can assert the scale-safe sink actually received the result files.
     */
   @volatile private[graft] var lastSinkPath: String = ""
 
-  /** Every wrapper-created temp dir is swept by one JVM shutdown hook —
-    * a long-lived session running many streaming queries can't accumulate
-    * unbounded /tmp data. Eager deletion isn't possible (the returned
-    * DataFrame still reads the dir), so the sweep runs at exit.
-    */
-  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempDirs.forEach { d =>
-        try graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(d))
-        catch { case _: Throwable => () } // sweep is best-effort at exit
-      }
-    }, "graft-stream-tmp-sweep"))
-  }
+  private val StreamFamily = "graft_stream_"
 
-  private def sinkDirs(tag: String): (String, String) = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_stream_${tag}_${counter.incrementAndGet()}")
-      .toString
-    tempDirs.add(dir)
+  /** Result and checkpoint directories of one wrapper run. Like the staged
+    * inputs they are scratch artifacts of the `graft_stream_` family: the
+    * returned DataFrame still reads them, so they are deleted at exit, or
+    * by a later run's stale sweep after a kill.
+    */
+  private def sinkDirs(spark: SparkSession, tag: String): (String, String) = {
+    val dir = Scratch.fresh(spark, StreamFamily, tag)
     (s"$dir/result.parquet", s"$dir/chk")
   }
 
@@ -96,7 +84,7 @@ object StreamingOps {
     */
   private def completeToParquet(agg: DataFrame, tag: String): DataFrame = {
     val spark = agg.sparkSession
-    val (out, chk) = sinkDirs(tag)
+    val (out, chk) = sinkDirs(spark, tag)
     val q = agg.writeStream
       .outputMode("complete")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -191,7 +179,7 @@ object StreamingOps {
     // append-mode parquet FILE sink: the changelog lands on disk via the
     // executors (exactly-once through the sink's commit log); the driver
     // never holds the result table
-    val (out, chk) = sinkDirs("first")
+    val (out, chk) = sinkDirs(spark, "first")
     val q = deduped.toDF().writeStream
       .outputMode("append")
       .format("parquet")
@@ -262,18 +250,22 @@ object StreamingOps {
     */
   private[graft] def stageOne(
       inDir: String, df: DataFrame, name: String, mtime: Long): Unit = {
-    import java.nio.file.{Files, Paths}
     val tmp = s"$inDir/_stage_$name"
     df.coalesce(1).write.parquet(tmp)
-    val listing = Files.list(Paths.get(tmp))
-    val part =
-      try listing.filter(p => p.getFileName.toString.startsWith("part-"))
-        .findFirst().get()
-      finally listing.close()
-    Files.move(part, Paths.get(inDir, name))
-    graft.core.Fs.deleteRecursively(Paths.get(tmp))
-    Files.setLastModifiedTime(Paths.get(inDir, name),
-      java.nio.file.attribute.FileTime.fromMillis(mtime))
+    place(df.sparkSession, tmp, inDir, name, mtime)
+    Scratch.delete(df.sparkSession, tmp)
+  }
+
+  /** Move the one part file of `dir` to `inDir/name`, modified at `mtime`,
+    * on the directory's `FileSystem`.
+    */
+  private def place(
+      spark: SparkSession, dir: String, inDir: String, name: String, mtime: Long): Unit = {
+    val fs = Scratch.fileSystem(spark, inDir)
+    val part = new Path(dir, Compaction.partFiles(spark, dir).head)
+    val target = new Path(inDir, name)
+    if (!fs.rename(part, target)) throw new java.io.IOException(s"cannot move $part to $target")
+    fs.setTimes(target, mtime, -1)
   }
 
   /** Stage several data files in ONE write job: union the frames with an
@@ -285,27 +277,20 @@ object StreamingOps {
     */
   private[graft] def stageMany(
       inDir: String, frames: Seq[(DataFrame, String, Long)]): Unit = {
-    import java.nio.file.{Files, Paths}
-    val staged = s"$inDir/_staged_${counter.incrementAndGet()}"
+    val spark = frames.head._1.sparkSession
+    val staged = s"$inDir/_staged"
     frames.zipWithIndex
       .map { case ((df, _, _), i) => df.withColumn("_f", lit(i)) }
       .reduce(_ unionByName _)
       .coalesce(1)
       .write.partitionBy("_f").parquet(staged)
+    val fs = Scratch.fileSystem(spark, staged)
     frames.zipWithIndex.foreach { case ((df, name, mtime), i) =>
-      val dir = Paths.get(staged, s"_f=$i")
-      if (Files.exists(dir)) {
-        val listing = Files.list(dir)
-        val part =
-          try listing.filter(p => p.getFileName.toString.startsWith("part-"))
-            .findFirst().get()
-          finally listing.close()
-        Files.move(part, Paths.get(inDir, name))
-        Files.setLastModifiedTime(Paths.get(inDir, name),
-          java.nio.file.attribute.FileTime.fromMillis(mtime))
-      } else stageOne(inDir, df, name, mtime)
+      val dir = s"$staged/_f=$i"
+      if (fs.exists(new Path(dir))) place(spark, dir, inDir, name, mtime)
+      else stageOne(inDir, df, name, mtime)
     }
-    graft.core.Fs.deleteRecursively(Paths.get(staged))
+    Scratch.delete(spark, staged)
   }
 
   /** Watermark late-data discard, exercised for real: the input is staged
@@ -326,7 +311,6 @@ object StreamingOps {
     * withheld.
     */
   def lateDataWindowedAgg(spark: SparkSession, eventsParquet: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     // every-5th-event subsample: the drop semantics are volume-free, and
     // 5 is coprime to 24 so all hourly window residues stay populated
     val ev = spark.read.parquet(eventsParquet).filter(col("event_id") % 5 === 0)
@@ -337,10 +321,7 @@ object StreamingOps {
           expr("make_interval(0, 0, 0, 0, CAST(event_id % 24 AS INT), 0, 0)")).as("ts"),
         col("value"))
     }
-    val inDir = Files
-      .createTempDirectory(s"graft_stream_late_in_${counter.incrementAndGet()}")
-      .toString
-    tempDirs.add(inDir)
+    val inDir = Scratch.fresh(spark, StreamFamily, "late_in")
     stageMany(inDir, Seq(
       (staged("2026-01-02 00:00:00", Some(0)), "a_ontime.parquet", 1000000000000L),
       (staged("2026-01-02 00:00:00", Some(1)), "b_ontime.parquet", 1000000001000L),
@@ -354,7 +335,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total_value"))
       .select(col("window.start").as("ws"), col("n"), col("total_value"))
-    val (out, chk) = sinkDirs("late")
+    val (out, chk) = sinkDirs(spark, "late")
     val q = agg.writeStream
       .outputMode("append") // append: only watermark-closed windows land
       .format("parquet")
@@ -404,7 +385,6 @@ object StreamingOps {
     * spec-asserted separately with a scripted watermark advance.
     */
   def dedupDocuments(spark: SparkSession, documentsParquet: String): DataFrame = {
-    import java.nio.file.Files
     val docs = spark.read.parquet(documentsParquet)
       .select(col("doc_id"),
         graft.functions.TextAnalysis.docFingerprint(col("text")).as("fp"))
@@ -413,10 +393,7 @@ object StreamingOps {
     val full = docs.unionByName(planted)
       .withColumn("ts", to_timestamp(lit("2026-01-02 00:00:00")) +
         expr("make_interval(0, 0, 0, 0, 0, CAST(doc_id % 60 AS INT), 0)"))
-    val inDir = Files
-      .createTempDirectory(s"graft_stream_dedup_in_${counter.incrementAndGet()}")
-      .toString
-    tempDirs.add(inDir)
+    val inDir = Scratch.fresh(spark, StreamFamily, "dedup_in")
     // ONE write job stages all three residue files (stageMany; was
     // persist + three filtered writes — three jobs plus cache
     // bookkeeping)
@@ -429,7 +406,7 @@ object StreamingOps {
       .parquet(inDir)
       .withWatermark("ts", "30 days")
       .dropDuplicatesWithinWatermark("fp")
-    val (out, chk) = sinkDirs("dedup")
+    val (out, chk) = sinkDirs(spark, "dedup")
     val q = deduped.writeStream
       .outputMode("append")
       .format("parquet")

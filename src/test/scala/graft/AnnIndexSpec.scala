@@ -48,7 +48,7 @@ class AnnIndexSpec extends SparkSpec {
       AnnIndex.buildIvf(spark, root, emb.filter(col("vec_id") < 400),
         "vec_id", "embedding", cells = 8)
       assert(manifestMtime(root, "ivf_cells") > t1a, "changed corpus must rebuild")
-    } finally graft.core.Fs.deleteRecursively(Paths.get(root))
+    } finally graft.core.Scratch.delete(spark, root)
   }
 
   test("LSH bucket index resumes and matches direct lshTopK") {
@@ -74,7 +74,7 @@ class AnnIndexSpec extends SparkSpec {
         .collect().map(_.toSeq).toSet
       assert(indexed === direct)
       assert(indexed.nonEmpty)
-    } finally graft.core.Fs.deleteRecursively(Paths.get(root))
+    } finally graft.core.Scratch.delete(spark, root)
   }
 
   test("int8 vector stage resumes; dequantized vectors match Ann.quantize") {
@@ -96,6 +96,6 @@ class AnnIndexSpec extends SparkSpec {
         .select(col("vec_id"), Ann.dequantize(struct(col("q"), col("scale"))).as("v"))
       assert(stored.join(inline.withColumnRenamed("v", "v2"), "vec_id")
         .filter(col("v") =!= col("v2")).count() === 0L)
-    } finally graft.core.Fs.deleteRecursively(Paths.get(root))
+    } finally graft.core.Scratch.delete(spark, root)
   }
 }

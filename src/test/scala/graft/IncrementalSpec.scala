@@ -129,6 +129,34 @@ class IncrementalSpec extends SparkSpec {
     }
   }
 
+  test("without broadcast joins an incremental run stays within its task budget") {
+    // With every join broadcast, a cache() in place of one of
+    // runIncremental's localCheckpoints adds few tasks, and the bound of
+    // the deltas above passes it. With sort-merge joins a cached shuffle
+    // output keeps all 1,024 initial partitions, and every fill and scan
+    // of it runs 1,024 tasks.
+    val cfg = ErPipeline.Config()
+    val pages0 = WebPageGen.pages(spark, 80L, Seed).toDF.localCheckpoint()
+    val full0 = ErPipeline.run(spark, pages0, cfg)
+    val (sigs0, scored0) = (full0.signatures.localCheckpoint(), full0.scored.localCheckpoint())
+    val pages1 = snapshot(pages0, (1L to 6L).map(later(_, "base")))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (stats, jobs) = try jobsOf {
+      val (inc, stats) = ErPipeline.runIncremental(spark, pages1, sigs0, scored0, cfg)
+      clustersOf(inc.clusters)
+      stats
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val tasks = jobs.map(_.tasks).sum
+    info(s"stale=${stats.staleRowCount} jobs=${jobs.size} tasks=$tasks")
+    assert(stats.staleRowCount === 6L)
+    val largest = jobs.sortBy(-_.tasks).take(5).map(j => s"job ${j.id} (${j.name}): ${j.tasks}")
+    // measured 88 tasks in 40 jobs; cache() in place of the stale,
+    // mergedSigs or reused checkpoint ran 17,469, 9,297 and 7,250
+    assert(tasks <= 1000L, s"$tasks tasks in ${jobs.size} jobs, largest ${largest.mkString(", ")}")
+  }
+
   test("priors with columns the signatures no longer carry give the same clusters") {
     val cfg = ErPipeline.Config()
     val pages0 = WebPageGen.pages(spark, 40L, Seed).toDF.localCheckpoint()

@@ -95,9 +95,7 @@ class PlanSpec extends SparkSpec {
       // killed prior JVM may have left behind — they block saveAsTable
       def fresh(name: String): Unit = {
         spark.sql(s"DROP TABLE IF EXISTS $name")
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:").stripPrefix("//")
-        graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(wh, name))
+        graft.core.Scratch.delete(spark, s"${spark.conf.get("spark.sql.warehouse.dir")}/$name")
       }
       fresh("ps_orders"); fresh("ps_customer")
       spark.read.parquet(s"$dir/orders.parquet").select("o_custkey", "o_totalprice")
@@ -148,7 +146,7 @@ class PlanSpec extends SparkSpec {
       val total = new java.io.File(tmp).listFiles().count(_.getName.startsWith("day="))
       assert(read > 0, "scan metrics not populated — assertion would be vacuous")
       assert(read < total, s"scan read $read file(s) of $total partitions — no pruning")
-    } finally graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(tmp))
+    } finally graft.core.Scratch.delete(spark, tmp)
   }
 
   test("AQE splits skewed join partitions at runtime (skew lever)") {

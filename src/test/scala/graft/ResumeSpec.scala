@@ -110,17 +110,17 @@ class ResumeSpec extends SparkSpec {
         "scores stage must recompute when an upstream param changes")
       assert(clusters2.toSeq !== clusters1.toSeq,
         "clusters stage must recompute when an upstream param changes")
-      // toggling useLsh changes signatures() output (block_keys gain/lose
-      // LSH keys) — it must invalidate the signatures stage and the chain
+      // lshTables = 0 changes signatures() output (block_keys lose the LSH
+      // keys) — it must invalidate the signatures stage and the chain
       val sigs2 = Files.readAllBytes(Paths.get(root, "signatures", "manifest.json"))
       ErPipeline.run(spark, pages,
-        ErPipeline.Config(outRoot = root, lshBits = 12, useLsh = false))
+        ErPipeline.Config(outRoot = root, lshBits = 12, lshTables = 0))
       val sigs3 = Files.readAllBytes(Paths.get(root, "signatures", "manifest.json"))
       val clusters3 = Files.readAllBytes(Paths.get(root, "clusters", "manifest.json"))
       assert(sigs3.toSeq !== sigs2.toSeq,
-        "signatures stage must recompute when useLsh toggles")
+        "signatures stage must recompute when lshTables changes")
       assert(clusters3.toSeq !== clusters2.toSeq,
-        "downstream stages must recompute when useLsh toggles")
+        "downstream stages must recompute when lshTables changes")
     } finally rmrf(root)
   }
 

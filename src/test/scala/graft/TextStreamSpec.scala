@@ -191,7 +191,7 @@ class TextStreamSpec extends SparkSpec {
       assert(width(root.resolve("k=1/part-0.parquet").toString) === math.min(sessionWidth, 2))
       assert(width(root.resolve("missing").toString) === sessionWidth)
       assert(width("nosuchfs://host/events.parquet") === sessionWidth)
-    } finally graft.core.Fs.deleteRecursively(root)
+    } finally graft.core.Scratch.delete(spark, root.toString)
   }
 
   test("streaming wrappers land in a file sink, never a driver memory table") {
